@@ -115,7 +115,8 @@ def main(argv: list[str]) -> int:
                           incremental=incremental, reviews_cap=reviews_cap)
     for name in ("dim_listings", "dim_listing_id_map", "dim_hosts",
                  "dim_dates", "fact_calendar", "fact_reviews"):
-        n = tables.stats.get(name, getattr(tables, name).count())
+        n = (tables.stats[name] if name in tables.stats
+             else getattr(tables, name).count())
         print(f"{name}: {n} rows")
     spark.stop()
     return 0

@@ -1,15 +1,24 @@
 """End-to-end ETL orchestration — the reference's `main.py` menu option 4
-(run_complete_etl, SURVEY §3.1) as one lazy-pipeline call.
+(run_complete_etl, SURVEY §3.1) as one pipeline call.
 
 File-discovery contract matches the reference (config/settings.py:30-32):
 a data directory holding per-city gzip CSVs named
 ``{Country}_{City}_{kind}_{date}.csv.gz`` with kind ∈ {listings,
 calendar, reviews}.
 
-Stages (each a DataFrame lineage, materialized only at sink writes):
-  discover → clean listings (per-file geography) → dim_listings MERGE +
-  id_map → dim_hosts → dim_dates (gap-free union of calendar+review
-  dates) → fact_calendar weekly rollup → fact_reviews → views.
+Stages, in dependency order:
+  discover (headers read in Python, no Spark job) → clean listings
+  (per-file geography) → dim_listings MERGE → id_map → dim_hosts →
+  dim_dates (gap-free union of calendar+review dates) → fact_calendar
+  weekly rollup → fact_reviews → views.
+
+With an output directory each table is materialized exactly once: it is
+written, its row count rides that write as an ``Observation``, and it is
+read back with its known schema, so every dependent reads the written
+table instead of re-running its lineage from the raw CSVs — the
+reference's own order, where the facts join the LOADED dim_listings
+(sql/data/04_load_calendar.sql:42). Without one, every table stays a
+lazy lineage.
 
 Scale shape: per-city raw files parallelize the gzip scans (gzip is not
 splittable — file count IS the parallelism); everything downstream is
@@ -19,13 +28,16 @@ exchanges are the rollup groupBys.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
+import shutil
 from dataclasses import dataclass, field
 from glob import glob
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from sql_etl_data_warehouse_inside_airbnb_spark.plans.pipeline import (
     build_dim_dates,
@@ -42,6 +54,7 @@ from sql_etl_data_warehouse_inside_airbnb_spark.plans.enrich import (
     pretreat_listings,
 )
 from sql_etl_data_warehouse_inside_airbnb_spark.sources.io import (
+    csv_header,
     read_csv_raw,
     split_quarantine,
 )
@@ -91,8 +104,6 @@ def _roll_forward_swaps(output_dir: str) -> None:
     atomic: without it, a kill mid-loop leaves a MIXED warehouse
     (some tables new, some old), and a retry would replay the batch's
     id-map/reject appends onto already-merged state."""
-    import shutil
-
     journal = os.path.join(output_dir, _SWAP_JOURNAL)
     if not os.path.exists(journal):
         return
@@ -121,9 +132,10 @@ def _load_existing(spark: SparkSession,
     FORWARD first (_roll_forward_swaps); a ``<name>.__old`` without a
     journal (legacy state) is restored — never treated as an absent
     warehouse, which would silently full-rebuild from whatever
-    partial data_dir the retry was given."""
-    import shutil
+    partial data_dir the retry was given.
 
+    Schemas are inferred from the files here (not taken from this
+    module's plans): the prior warehouse may predate this code."""
     _roll_forward_swaps(output_dir)
     prior: dict[str, DataFrame] = {}
     for name in CORE_TABLES:
@@ -137,12 +149,76 @@ def _load_existing(spark: SparkSession,
         if not os.path.exists(path):
             return None
         df = spark.read.parquet(path)
-        # enrichment columns re-derive each run (pure projections) —
-        # strip them so merge schemas align with freshly-typed sources
-        drop = ["part_month", "host_country_corrected", "review_lang"]
+        # the listings/hosts pretreatment re-derives each run (a pure
+        # projection) — strip it so merge schemas align with the
+        # freshly-typed sources
+        drop = ["part_month", "host_country_corrected"]
         df = df.drop(*[c for c in drop if c in df.columns])
+        if name == "fact_reviews" and "review_lang" not in df.columns:
+            # a warehouse written before language enrichment; otherwise
+            # prior reviews keep their stored language and only the
+            # batch's new reviews are detected
+            df = add_review_lang(df)
         prior[name] = df
     return prior
+
+
+def _has_parquet(path: str) -> bool:
+    for _root, _dirs, names in os.walk(path):
+        if any(n.endswith(".parquet") for n in names):
+            return True
+    return False
+
+
+def _write_counted(df: DataFrame, path: str,
+                   partition_col: str | None = None) -> int:
+    """Overwrite ``path`` with ``df`` as Parquet and return the number of
+    rows written, counted by an ``Observation`` on that same write (a
+    separate count() would re-run ``df``'s whole lineage).
+
+    An empty dynamic-partitioned write emits no parquet footer, so it
+    is rewritten with one empty task to keep the schema readable;
+    detecting that from the written files costs nothing when the table
+    is non-empty (a pre-write take(1) would run every plan twice)."""
+    obs = Observation()
+    writer = df.observe(obs, F.count(F.lit(1)).alias("rows")) \
+        .write.mode("overwrite")
+    if partition_col:
+        writer = writer.partitionBy(partition_col)
+    writer.parquet(path)
+    if not _has_parquet(path):
+        (df.drop(partition_col) if partition_col else df) \
+            .repartition(1).write.mode("overwrite").parquet(path)
+    return obs.get["rows"]
+
+
+def _read_back(spark: SparkSession, path: str,
+               schema: StructType) -> DataFrame:
+    """A table this run wrote, read with the schema it was written with
+    (no footer-inference job), without its partition column."""
+    return spark.read.schema(schema).parquet(path).drop("part_month")
+
+
+# Facts partition by a month derived from their time column, so
+# date-range queries prune files instead of scanning the table, while
+# partition counts stay bounded (~12/year, not 365/year).
+_PART_SOURCE = {"fact_calendar": "week_start_date",
+                "fact_reviews": "review_date"}
+
+# empty placeholders carry the REAL table schemas: a 2-column stand-in,
+# once persisted, poisons the next incremental run's unionByName and
+# breaks queries against the documented columns
+_EMPTY = {
+    "dim_dates": "date_id int, full_date date, year int, quarter int, "
+                 "month int, month_name string, day int, day_name string, "
+                 "is_weekend boolean",
+    "fact_calendar": "listing_id bigint, week_start_date date, "
+                     "week_end_date date, avg_price_per_week decimal(10,2), "
+                     "available_days_per_week int",
+    "fact_reviews": "review_id bigint, listing_id bigint, date_id int, "
+                    "reviewer_id bigint, reviewer_name string, "
+                    "comments string, review_date date",
+}
 
 
 def run_pipeline(spark: SparkSession, data_dir: str,
@@ -150,7 +226,8 @@ def run_pipeline(spark: SparkSession, data_dir: str,
                  incremental: bool = False,
                  reviews_cap: bool = False) -> WarehouseTables:
     """Full ETL. With ``output_dir``, each warehouse table is persisted
-    as Parquet (the typed layer); otherwise everything stays lazy.
+    as Parquet (the typed layer) and ``stats`` holds each table's row
+    count; otherwise everything stays lazy.
 
     ``incremental=True`` loads the prior warehouse from ``output_dir``
     (if present) and applies the reference's re-load semantics instead
@@ -173,10 +250,36 @@ def run_pipeline(spark: SparkSession, data_dir: str,
         _roll_forward_swaps(output_dir)
     prior = (_load_existing(spark, output_dir)
              if incremental and output_dir else None)
+    # An incremental load's plans READ the prior tables it replaces, so
+    # every table is staged next to the live one and swapped in only
+    # once all are staged; a full load writes in place.
+    suffix = ".__tmp" if prior is not None else ""
+    stats: dict[str, int] = {}
+    schemas: dict[str, StructType] = {}
+
+    def _stage(name: str, df: DataFrame) -> DataFrame:
+        """Materialize table ``name`` once and return it read back, so
+        dependents read the written table rather than re-run ``df``."""
+        if not output_dir:
+            return df
+        path = os.path.join(output_dir, name) + suffix
+        if suffix:
+            shutil.rmtree(path, ignore_errors=True)
+        part_col = None
+        if _PART_SOURCE.get(name) in df.columns:
+            part_col = "part_month"
+            df = df.withColumn(part_col, F.date_format(
+                F.col(_PART_SOURCE[name]), "yyyy-MM"))
+        stats[name] = _write_counted(df, path, part_col)
+        schemas[name] = df.schema
+        return _read_back(spark, path, df.schema)
+
+    def _raw(path: str) -> DataFrame:
+        return read_csv_raw(spark, path, columns=csv_header(path))
 
     cleaned = None
     for path, city, country in files["listings"]:
-        c = clean_listings(read_csv_raw(spark, path),
+        c = clean_listings(_raw(path),
                            property_city=city, property_country=country)
         cleaned = c if cleaned is None else cleaned.unionByName(c)
 
@@ -191,7 +294,7 @@ def run_pipeline(spark: SparkSession, data_dir: str,
         count_actions=False)
     # post-load enrichment (the reference's pretreatment UPDATEs):
     # US-state -> country fix + is_local_host, recomputed every run
-    dim_listings = pretreat_listings(merge_res.df)
+    dim_listings = _stage("dim_listings", pretreat_listings(merge_res.df))
     if prior:
         # the id map is a per-LOAD audit trail (reference inserts one
         # row per source row every batch, data_loader.py:292-300), so
@@ -204,12 +307,14 @@ def run_pipeline(spark: SparkSession, data_dir: str,
         # warehouse. Deliberately re-running a committed batch is a
         # new load and appends again, the reference's own semantics.
         id_map = prior["dim_listing_id_map"].unionByName(id_map)
-    dim_hosts = pretreat_hosts(build_dim_hosts(dim_listings))
+    id_map = _stage("dim_listing_id_map", id_map)
+    dim_hosts = _stage("dim_hosts",
+                       pretreat_hosts(build_dim_hosts(dim_listings)))
 
     def _union(kind: str) -> DataFrame | None:
         df = None
         for path, _, _ in files[kind]:
-            d = read_csv_raw(spark, path)
+            d = _raw(path)
             df = d if df is None else df.unionByName(d, allowMissingColumns=True)
         return df
 
@@ -223,68 +328,47 @@ def run_pipeline(spark: SparkSession, data_dir: str,
         )
         reviews_raw = None
         for path, _, _ in files["reviews"]:
-            d = cap_reviews(read_csv_raw(spark, path))
+            d = cap_reviews(_raw(path))
             reviews_raw = (d if reviews_raw is None
                            else reviews_raw.unionByName(
                                d, allowMissingColumns=True))
     else:
         reviews_raw = _union("reviews")
 
-    # empty placeholders carry the REAL table schemas: a 2-column
-    # stand-in, once persisted, poisons the next incremental run's
-    # unionByName and breaks queries against the documented columns
-    EMPTY_DIM_DATES = ("date_id int, full_date date, year int, "
-                       "quarter int, month int, month_name string, "
-                       "day int, day_name string, is_weekend boolean")
     date_sources = [d for d in (calendar_raw, reviews_raw) if d is not None]
     if date_sources:
         dim_dates = build_dim_dates(*date_sources)
+        if prior:
+            # IDENTITY semantics: existing date_ids are frozen; only
+            # dates the prior dimension lacks get new ids, numbered
+            # past its max
+            prior_dates = prior["dim_dates"]
+            fresh = (dim_dates.drop("date_id")
+                     .join(prior_dates.select("full_date"), "full_date",
+                           "left_anti"))
+            max_id = F.broadcast(
+                prior_dates.agg(F.max("date_id").alias("__max_id")))
+            fresh = (fresh.crossJoin(max_id)
+                     .withColumn("date_id",
+                                 (F.row_number().over(
+                                     Window.orderBy("full_date"))
+                                  + F.coalesce("__max_id", F.lit(0)))
+                                 .cast("int"))
+                     .drop("__max_id"))
+            dim_dates = prior_dates.unionByName(
+                fresh.select(*prior_dates.columns))
     elif prior:
         # no date-bearing files this run: KEEP the accumulated date
         # dimension (overwriting it with an empty frame would orphan
         # every date_id FK in fact_reviews)
         dim_dates = prior["dim_dates"]
     else:
-        dim_dates = spark.createDataFrame([], EMPTY_DIM_DATES)
-    if prior and date_sources:
-        # IDENTITY semantics: existing date_ids are frozen; only dates
-        # the prior dimension lacks get new ids, numbered past its max
-        from pyspark.sql import Window
+        dim_dates = spark.createDataFrame([], _EMPTY["dim_dates"])
+    dim_dates = _stage("dim_dates", dim_dates)
 
-        prior_dates = prior["dim_dates"]
-        fresh = (dim_dates.drop("date_id")
-                 .join(prior_dates.select("full_date"), "full_date",
-                       "left_anti"))
-        max_id = F.broadcast(
-            prior_dates.agg(F.max("date_id").alias("__max_id")))
-        fresh = (fresh.crossJoin(max_id)
-                 .withColumn("date_id",
-                             (F.row_number().over(
-                                 Window.orderBy("full_date"))
-                              + F.coalesce("__max_id", F.lit(0)))
-                             .cast("int"))
-                 .drop("__max_id"))
-        dim_dates = prior_dates.unionByName(
-            fresh.select(*prior_dates.columns))
-
-    fact_calendar = (build_fact_calendar(calendar_raw, dim_listings)
-                     if calendar_raw is not None
-                     else spark.createDataFrame(
-                         [], "listing_id bigint, week_start_date date, "
-                             "week_end_date date, "
-                             "avg_price_per_week decimal(10,2), "
-                             "available_days_per_week int"))
-    fact_reviews = (build_fact_reviews(
-                        reviews_raw, dim_listings, dim_dates,
-                        existing=prior["fact_reviews"] if prior else None)
-                    if reviews_raw is not None
-                    else spark.createDataFrame(
-                        [], "review_id bigint, listing_id bigint, "
-                            "date_id int, reviewer_id bigint, "
-                            "reviewer_name string, comments string, "
-                            "review_date date"))
-    if prior:
-        if calendar_raw is not None:
+    if calendar_raw is not None:
+        fact_calendar = build_fact_calendar(calendar_raw, dim_listings)
+        if prior:
             # insert-if-absent on the (listing_id, week_start_date) PK —
             # T-SQL MERGE-free re-load: existing weeks keep their rows
             fact_calendar = prior["fact_calendar"].unionByName(
@@ -292,68 +376,30 @@ def run_pipeline(spark: SparkSession, data_dir: str,
                     prior["fact_calendar"]
                     .select("listing_id", "week_start_date"),
                     ["listing_id", "week_start_date"], "left_anti"))
-        else:
-            fact_calendar = prior["fact_calendar"]
-        fact_reviews = (prior["fact_reviews"].unionByName(fact_reviews)
-                        if reviews_raw is not None
-                        else prior["fact_reviews"])
-    if "comments" in fact_reviews.columns:
-        # language detection re-derives over the full fact each run
-        fact_reviews = add_review_lang(fact_reviews)
+    elif prior:
+        fact_calendar = prior["fact_calendar"]
+    else:
+        fact_calendar = spark.createDataFrame([], _EMPTY["fact_calendar"])
+    fact_calendar = _stage("fact_calendar", fact_calendar)
 
-    register_views(spark, dim_listings)
+    if reviews_raw is not None:
+        # language detection runs on this batch's new reviews only;
+        # prior rows keep their stored review_lang
+        fact_reviews = add_review_lang(build_fact_reviews(
+            reviews_raw, dim_listings, dim_dates,
+            existing=prior["fact_reviews"] if prior else None))
+        if prior:
+            fact_reviews = prior["fact_reviews"].unionByName(fact_reviews)
+    elif prior:
+        fact_reviews = prior["fact_reviews"]
+    else:
+        fact_reviews = add_review_lang(
+            spark.createDataFrame([], _EMPTY["fact_reviews"]))
+    fact_reviews = _stage("fact_reviews", fact_reviews)
 
     tables = WarehouseTables(dim_listings, id_map, dim_hosts, dim_dates,
-                             fact_calendar, fact_reviews)
-    # the whole star schema is the SQL surface, not just the views
-    for name in ("dim_listings", "dim_listing_id_map", "dim_hosts",
-                 "dim_dates", "fact_calendar", "fact_reviews"):
-        getattr(tables, name).createOrReplaceTempView(name)
+                             fact_calendar, fact_reviews, stats)
     if output_dir:
-        # Facts partition by a time bucket so date-range queries prune
-        # files instead of scanning the table; at 100 TB this is the
-        # difference between reading one month and reading everything.
-        # Partition on a derived month (not the raw date) to keep
-        # partition counts bounded (~12/year, not 365/year).
-        part_col = {
-            "fact_calendar": ("week_start_date", "month"),
-            "fact_reviews": ("review_date", "month") if
-            "review_date" in fact_reviews.columns else None,
-        }
-        # Incremental plans READ the prior parquet they are about to
-        # replace (and later tables' plans read EARLIER tables' prior
-        # files through the merge lineage) — so materialize every table
-        # to a temp dir first, and only then swap them all in.
-        import shutil
-
-        def _has_parquet(p: str) -> bool:
-            for root, _dirs, names in os.walk(p):
-                if any(n.endswith(".parquet") for n in names):
-                    return True
-            return False
-
-        suffix = ".__tmp" if prior is not None else ""
-        for name in CORE_TABLES:
-            df = getattr(tables, name)
-            tmp_path = os.path.join(output_dir, name) + suffix
-            if suffix:
-                shutil.rmtree(tmp_path, ignore_errors=True)
-            spec = part_col.get(name)
-            if spec is not None and spec[0] in df.columns:
-                src, _ = spec
-                df = df.withColumn("part_month",
-                                   F.date_format(F.col(src), "yyyy-MM"))
-                df.write.mode("overwrite").partitionBy("part_month") \
-                    .parquet(tmp_path)
-            else:
-                df.write.mode("overwrite").parquet(tmp_path)
-            # empty detection from the WRITTEN output (a pre-write
-            # take(1) would execute every full plan twice): dynamic-
-            # partitioned empty writes emit no parquet footer, so
-            # rewrite with one empty task to keep the schema readable
-            if not _has_parquet(tmp_path):
-                df.drop("part_month").repartition(1) \
-                    .write.mode("overwrite").parquet(tmp_path)
         # rejects are a cumulative audit log of per-load SLICES (the
         # reference's skipped-rows csv), stored as one hive
         # subdirectory per load keyed by a DETERMINISTIC batch id
@@ -370,21 +416,15 @@ def run_pipeline(spark: SparkSession, data_dir: str,
         # from colliding on one slice and silently overwriting the
         # earlier load's rejects. The STAT reports THIS run's rejects,
         # so per-run monitoring doesn't over-report on day 2+.
-        import hashlib
-
-        rejects_dir = os.path.join(output_dir, "rejects_listings")
         batch_id = hashlib.md5("\n".join(
             "{}\x00{}\x00{}".format(os.path.basename(p),
                                     os.stat(p).st_size,
                                     os.stat(p).st_mtime_ns)
             for k in sorted(files)
             for p, _, _ in files[k]).encode()).hexdigest()[:16]
-        slice_dir = os.path.join(rejects_dir, f"load_batch={batch_id}")
-        tables.stats["rejects_listings"] = rejects.count()
-        rejects.write.mode("overwrite").parquet(slice_dir)
-        if not _has_parquet(slice_dir):
-            rejects.repartition(1).write.mode("overwrite") \
-                .parquet(slice_dir)
+        slice_dir = os.path.join(output_dir, "rejects_listings",
+                                 f"load_batch={batch_id}")
+        stats["rejects_listings"] = _write_counted(rejects, slice_dir)
         if suffix:
             # journal AFTER all staging is materialized, BEFORE the
             # first swap: its presence promises every .__tmp is
@@ -399,31 +439,26 @@ def run_pipeline(spark: SparkSession, data_dir: str,
                 jf.flush()
                 os.fsync(jf.fileno())
             os.replace(journal + ".tmp", journal)
-        for name in CORE_TABLES:
-            final_path = os.path.join(output_dir, name)
-            if suffix:
+            for name in CORE_TABLES:
                 # crash-safe swap: rename the live table aside, move
                 # the staged one in, then drop the backup. A kill in
                 # the window leaves <name>.__old, which _load_existing
                 # restores — never an rmtree'd hole that would silently
                 # trigger a full rebuild over a partial data_dir.
+                final_path = os.path.join(output_dir, name)
                 old_path = final_path + ".__old"
                 shutil.rmtree(old_path, ignore_errors=True)
                 if os.path.exists(final_path):
                     os.rename(final_path, old_path)
                 os.replace(final_path + suffix, final_path)
                 shutil.rmtree(old_path, ignore_errors=True)
-            # rebind to the persisted layer: the in-flight lineage may
-            # reference pre-swap files (incremental), and re-reading
-            # parquet beats recomputing the whole plan downstream
-            persisted = spark.read.parquet(final_path)
-            if "part_month" in persisted.columns:
-                persisted = persisted.drop("part_month")
-            setattr(tables, name, persisted)
-            persisted.createOrReplaceTempView(name)
-            tables.stats[name] = persisted.count()
-        if suffix:
+                # the staged read-back pointed at the moved .__tmp dir
+                setattr(tables, name,
+                        _read_back(spark, final_path, schemas[name]))
             # all core swaps landed: the batch is committed
-            os.remove(os.path.join(output_dir, _SWAP_JOURNAL))
-        register_views(spark, tables.dim_listings)
+            os.remove(journal)
+    # the whole star schema is the SQL surface, not just the views
+    for name in CORE_TABLES:
+        getattr(tables, name).createOrReplaceTempView(name)
+    register_views(spark, tables.dim_listings)
     return tables

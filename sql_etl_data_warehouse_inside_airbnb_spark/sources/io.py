@@ -24,6 +24,9 @@ and everything downstream scans splittable columnar files with pushdown.
 
 from __future__ import annotations
 
+import csv
+import gzip
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
@@ -31,6 +34,27 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 def _all_string_schema(columns: list[str]) -> StructType:
     return StructType([StructField(c, StringType(), True) for c in columns])
+
+
+def csv_header(path: str) -> list[str]:
+    """The column names ``read_csv_raw(spark, path)`` infers from the
+    header row, read in Python from the file's first CSV record, so a
+    caller passing them as ``columns=`` runs no Spark job for the header.
+
+    Spark's header rules (CSVUtils.makeSafeHeader, checked on pyspark
+    4.1.2): a leading UTF-8 BOM is stripped, an empty name becomes
+    ``_c{i}``, a name repeated case-insensitively becomes ``{name}{i}``
+    at each occurrence, and a zero-byte file has no columns. Quoting
+    follows ``read_csv_raw``: RFC-4180 doubled quotes, quoted commas and
+    newlines inside a name."""
+    opener = gzip.open if path.endswith(".gz") else open
+    with opener(path, "rt", encoding="utf-8-sig", errors="replace",
+                newline="") as f:
+        row = next((r for r in csv.reader(f) if r), [])
+    names = [c.lower() for c in row if c]
+    dups = {c for c in names if names.count(c) > 1}
+    return [f"_c{i}" if not c else f"{c}{i}" if c.lower() in dups else c
+            for i, c in enumerate(row)]
 
 
 def read_csv_raw(spark: SparkSession, path: str,

@@ -11,6 +11,9 @@ import gzip
 import os
 import shutil
 
+import pytest
+
+from sql_etl_data_warehouse_inside_airbnb_spark.plans import etl
 from sql_etl_data_warehouse_inside_airbnb_spark.plans.etl import run_pipeline
 
 LISTING_COLS = ["id", "host_id", "host_name", "host_location",
@@ -174,3 +177,49 @@ def test_reject_slices_distinct_for_identical_basenames(spark, tmp_path):
     # both loads' rejects survive in the cumulative log
     log = spark.read.parquet(os.path.join(str(out), "rejects_listings"))
     assert log.count() == 2
+
+
+def test_crash_while_staging_fact_reviews_leaves_day1_live(spark, tmp_path,
+                                                           monkeypatch):
+    """A kill while staging the last table, after every earlier table is
+    staged: nothing was swapped and no journal exists, so the live
+    warehouse still holds day 1, and a retry commits the same batch as
+    an uninterrupted run."""
+    out = tmp_path / "wh"
+    t1 = run_pipeline(spark, str(_day1(tmp_path)), str(out))
+    ref = tmp_path / "ref"
+    shutil.copytree(out, ref)
+
+    day2 = tmp_path / "day2"
+    day2.mkdir()
+    _wgz(day2, "France_Paris_listings_2025-06-08.csv.gz", LISTING_COLS, [
+        [102, 9002, "Bob", "Lyon, France", "Opera", "48.87", "2.33",
+         "$80.00", "5", "4.00", "1"],
+        ["bad-id", 9003, "Eve", "", "", "", "", "", "", "", ""],
+    ])
+    _wgz(day2, "France_Paris_calendar_2025-06-08.csv.gz", CALENDAR_COLS, [
+        [102, "2025-06-09", "t", "$80.00"],
+    ])
+    _wgz(day2, "France_Paris_reviews_2025-06-08.csv.gz", REVIEW_COLS, [
+        [102, 9, "2025-06-09", 79, "Ly", "fine"],
+    ])
+    want = run_pipeline(spark, str(day2), str(ref), incremental=True).stats
+
+    write = etl._write_counted
+
+    def killed_at_fact_reviews(df, path, partition_col=None):
+        if os.path.basename(path) == "fact_reviews.__tmp":
+            raise RuntimeError("killed while staging fact_reviews")
+        return write(df, path, partition_col)
+
+    monkeypatch.setattr(etl, "_write_counted", killed_at_fact_reviews)
+    with pytest.raises(RuntimeError, match="killed"):
+        run_pipeline(spark, str(day2), str(out), incremental=True)
+    monkeypatch.undo()
+
+    assert not os.path.exists(out / etl._SWAP_JOURNAL)
+    for name in etl.CORE_TABLES:
+        live = spark.read.parquet(str(out / name))
+        assert live.count() == t1.stats[name], name
+    assert run_pipeline(spark, str(day2), str(out),
+                        incremental=True).stats == want

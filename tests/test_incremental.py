@@ -7,7 +7,13 @@ from __future__ import annotations
 import csv
 import gzip
 import os
+import shutil
 
+from pyspark.sql import functions as F
+
+from sql_etl_data_warehouse_inside_airbnb_spark.plans.enrich import (
+    add_review_lang,
+)
 from sql_etl_data_warehouse_inside_airbnb_spark.plans.etl import run_pipeline
 
 LISTING_COLS = ["id", "host_id", "host_name", "host_location",
@@ -132,6 +138,65 @@ def test_enrichment_columns(spark, tmp_path):
     langs = {r.review_id: r.review_lang for r in t.fact_reviews.collect()}
     assert langs[11] == "en"
     assert langs[12] == "und"
+
+
+def _rewrite_fact_reviews(spark, out, tmp_path, fn):
+    """Replace the stored fact_reviews with ``fn`` applied to it."""
+    fr, tmp = out / "fact_reviews", tmp_path / "fact_reviews_rewrite"
+    fn(spark.read.parquet(str(fr))).write.partitionBy("part_month") \
+        .parquet(str(tmp))
+    shutil.rmtree(fr)
+    shutil.move(str(tmp), str(fr))
+
+
+def test_incremental_detects_language_on_new_reviews_only(spark, tmp_path):
+    """An incremental load detects review_lang on its new reviews only:
+    prior rows keep the stored value (a sentinel survives, so nothing
+    re-derived it), except in a warehouse written before the enrichment,
+    whose prior rows get it derived."""
+    out = tmp_path / "wh"
+    listing = [101, 9001, "Ana", "Paris, France", "Marais", "48.85", "2.35",
+               "$100.00", "10", "4.50", "2"]
+
+    def load(day, reviews, incremental=True):
+        d = tmp_path / day
+        d.mkdir()
+        _wgz(d, f"France_Paris_listings_{day}.csv.gz", LISTING_COLS,
+             [listing])
+        _wgz(d, f"France_Paris_reviews_{day}.csv.gz", REVIEW_COLS, reviews)
+        t = run_pipeline(spark, str(d), str(out), incremental=incremental)
+        return {r.review_id: r.review_lang for r in t.fact_reviews.collect()}
+
+    def detected(review_id):
+        fr = spark.read.parquet(str(out / "fact_reviews")) \
+            .filter(F.col("review_id") == review_id).drop("review_lang")
+        return add_review_lang(fr).first().review_lang
+
+    day1 = load("2025-06-01", [
+        [101, 1, "2025-05-01", 71, "Zoe",
+         "the quick brown fox and the lazy dog were here with this"],
+        [101, 2, "2025-05-02", 72, "Yan", ""],
+    ], incremental=False)
+
+    # pre-enrichment warehouse: prior rows are derived on the next load
+    _rewrite_fact_reviews(spark, out, tmp_path,
+                          lambda df: df.drop("review_lang"))
+    day2 = load("2025-06-08", [
+        [101, 1, "2025-05-01", 71, "Zoe", "re-sent, already loaded"],
+        [101, 3, "2025-06-09", 73, "Xia",
+         "la maison est très belle et le quartier est calme"],
+    ])
+    assert {k: day2[k] for k in day1} == day1
+    assert day2[3] == detected(3)
+
+    # stored languages are kept, not re-derived
+    _rewrite_fact_reviews(spark, out, tmp_path,
+                          lambda df: df.withColumn("review_lang", F.lit("xx")))
+    day3 = load("2025-06-15", [
+        [101, 4, "2025-06-16", 74, "Wu", "a lovely stay in the heart of it"],
+    ])
+    assert {k: day3[k] for k in (1, 2, 3)} == {1: "xx", 2: "xx", 3: "xx"}
+    assert day3[4] == detected(4)
 
 
 def test_reject_sink(spark, tmp_path):

@@ -4,9 +4,14 @@ partition pruning — the layout behavior that IS the primary index at
 
 from __future__ import annotations
 
+import gzip
+
+import pytest
 from pyspark.sql import functions as F
 
 from sql_etl_data_warehouse_inside_airbnb_spark.sources.io import (
+    csv_header,
+    read_csv_raw,
     read_format,
     read_table,
     write_format,
@@ -106,3 +111,27 @@ def test_pipe_csv_roundtrip_rfc4180_hazards(spark):
             for r in read_pipe_csv(spark, d, columns=["id", "txt"])
             .collect()}
     assert back == dict(enumerate(vals))
+
+
+@pytest.mark.parametrize("name, text, want", [
+    # BOM, empty name, case-insensitive duplicate, quoted comma and
+    # quoted newline in one header
+    ("hazards.csv.gz",
+     '\ufeffid,,name,Name,"we,ird","multi\nline"\n1,2,3,4,5,6\n',
+     ["id", "_c1", "name2", "Name3", "we,ird", "multi\nline"]),
+    ("header_only.csv.gz", "listing_id,date\n", ["listing_id", "date"]),
+    ("empty.csv.gz", "", []),
+    ("zero_byte.csv", None, []),
+])
+def test_csv_header_matches_spark_header_inference(spark, tmp_path, name,
+                                                   text, want):
+    """csv_header is the Python twin of the header row Spark infers:
+    the ETL passes it as ``columns=`` to skip a header job per file."""
+    path = str(tmp_path / name)
+    if text is None:
+        open(path, "wb").close()
+    else:
+        with gzip.open(path, "wt", encoding="utf-8", newline="") as f:
+            f.write(text)
+    assert read_csv_raw(spark, path).columns == want
+    assert csv_header(path) == want
