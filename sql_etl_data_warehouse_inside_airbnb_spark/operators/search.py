@@ -132,18 +132,10 @@ def bm25_topk(df: DataFrame, key_col: str, text_col: str,
     stats = base.agg(
         F.count(F.lit(1)).cast("bigint").alias("__n_docs"),
         F.avg("__dl").alias("__avgdl"))
-    # r14: explode the INLINE hit-filter expression — exploding a
-    # projected __hits attribute let InferFiltersFromGenerate push
-    # size(__hits)>0 below the Project, re-running the whole
-    # tokenize+filter chain per row at the scan (the ppjoin/_gram_list
-    # trap); inline leaves no attribute to infer on, rows identical.
-    # r14: the inline-explode variant (the ppjoin/_gram_list trap fix)
-    # was measured here and REJECTED — the pushed size(__hits)>0
-    # filter this shape generates is a row-PRUNER, not a tax: most
-    # docs contain no query term, so the scan-level filter drops them
-    # before the Generate and the re-evaluation only hits the few
-    # surviving hit docs. Interleaved A/B min-of-5: inline 0.779/0.775
-    # vs this shape 0.580/0.585 (bm25/portable) — ~30% worse inline.
+    # inline explode is a loss here: the pushed size(__hits)>0 is a row
+    # pruner — most docs hold no query term, so the scan-level filter
+    # drops them before the Generate and only the few hit docs
+    # re-tokenize (inline measured ~30% slower, bm25 and portable)
     tf = (df.select(F.col(key_col),
                     F.size(toks).cast("bigint").alias("__dl"),
                     F.filter(toks, lambda t: t.isin(qterms))

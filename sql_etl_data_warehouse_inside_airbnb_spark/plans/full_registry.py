@@ -448,64 +448,63 @@ _GREEN = (_R01_GREEN | _R02_GREEN | _R03_GREEN | _R04_GREEN
 # vintages, 50, _FRONT) and asserts _PRIORITY equals it verbatim.
 _FRONT: list[str] = []
 
-# Explicit front of the queue — the ~50-entry adjudication window.
-# Round 14: emitted VERBATIM by `python tools/gen_priority.py`
-# (vintage = max round per entry across CORRECTNESS_r*.json, numeric
-# file order; window = _FRONT + never-adjudicated + the 50 oldest by
-# (vintage, name)): _FRONT is empty (optimization round, no
-# re-encodes), so the window is the 9 oldest r7-vintage entries +
-# the 41 oldest r8-vintage refreshes.
+# Explicit front of the queue — the ~50-entry adjudication window,
+# emitted VERBATIM by `python tools/gen_priority.py` (vintage = max
+# round per entry across CORRECTNESS_r*.json, numeric file order;
+# window = _FRONT + never-adjudicated + the 50 oldest by (vintage,
+# name)).
+# window=50 vintage-mix {8: 6, 9: 44}
 _PRIORITY = [
-    "a17_cube",
-    "a34_corr_components",
-    "e8_dau_wau",
-    "ext_hard_negatives",
-    "f15_trycast_decimal",
-    "f3_truncate_substr",
-    "w3_lag_lead",
-    "w4_running_frames",
-    "w5_rank_ladder",
-    "a10_minmax",
-    "a12_distinct_count",
-    "a13_merge_action_counts",
-    "a14_profile",
-    "a1_pricing_summary",
-    "a36_weighted_median",
-    "a3_count_distinct",
-    "a4_global_count_distinct",
-    "a5_conditional_agg",
-    "a6_money_clean_agg",
-    "a7_weekly_rollup",
-    "a9_having_dups",
-    "ext_ann_ivf_pq_topk",
-    "ext_dedup_simhash_portable",
-    "ext_kfold_assign",
-    "ext_url_canonicalize",
-    "f10_date_dimension",
-    "f13_bool_norm",
-    "f5_parse_location",
-    "f9_date_parts",
-    "j1_fact_dim_join",
-    "j28_cdc_apply",
-    "j2_derived_date_join",
-    "j4_left_anti",
-    "j6_left_semi",
-    "j7_agg_join",
-    "j8_merge_upsert",
-    "j9_update_from_join",
-    "o2_topk",
-    "o3_keyed_sample",
-    "p10_threshold",
-    "p1_column_prune",
-    "p4_trycast_filter",
-    "p6_between",
-    "p7_isin",
-    "p8_interval_overlap",
-    "p9_eq_lookup",
-    "s1_scan_project",
-    "s4_limited_scan",
-    "set_except",
-    "set_intersect",
+    "set_union_distinct",
+    "stream_distinct_users",
+    "w11_running_distinct",
+    "w1_latest_per_key",
+    "w1_merge_dedup_latest",
+    "w2_first_per_group",
+    "a11_count_scalars",
+    "a18_pivot",
+    "a2_region_segment_view",
+    "a8_per_key_count",
+    "e10_cohort_retention",
+    "e9_peak_concurrency",
+    "ext_ann_batch_topk",
+    "ext_ann_brute_topk",
+    "ext_bpe_token_count",
+    "ext_chunk_documents",
+    "ext_data_prep_pipeline",
+    "ext_decontaminate",
+    "ext_dedup_embedding",
+    "ext_dedup_exact",
+    "ext_dedup_ngram_jaccard",
+    "ext_dedup_winnow_pairs",
+    "ext_domain_quota_sample",
+    "ext_fingerprint",
+    "ext_grouped_median",
+    "ext_label_outliers",
+    "ext_lang_id",
+    "ext_lang_id_udf",
+    "ext_multimodal_image_meta",
+    "ext_multimodal_meta",
+    "ext_pii_redact",
+    "ext_quality_score",
+    "ext_repetition_filter",
+    "ext_retrieval_eval",
+    "ext_text_quality",
+    "ext_token_count",
+    "ext_train_split",
+    "f12_case_conditional",
+    "f14_numeric_coercion",
+    "f16_metadata_math",
+    "f18_array_functions",
+    "f6_filename_geography",
+    "f7_date_conversion",
+    "g1_connected_components",
+    "g2_dedup_clusters",
+    "j10_catalog_join",
+    "j13_asof_join",
+    "j14_range_join",
+    "stream_quota_admission",
+    "stream_watermark_late_drop",
 ]
 
 

@@ -1,14 +1,17 @@
-"""ETL job budget: with an output directory, run_pipeline materializes
-each table once, counts rows by an Observation on that write, and reads
-headers in Python, so a full and an incremental load of the messy Airbnb
-fixtures stay within a pinned number of Spark jobs and never call
-DataFrame.count()."""
+"""ETL job budget and staging order: with an output directory,
+run_pipeline materializes each table once, counts rows by an Observation
+on that write, and reads headers in Python, so a full and an incremental
+load of the messy Airbnb fixtures stay within a pinned number of Spark
+jobs and never call DataFrame.count(). Each table's write is submitted
+as soon as the tables it reads are written, so independent tables write
+concurrently."""
 
 from __future__ import annotations
 
 import csv
 import gzip
 import os
+import threading
 
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
@@ -20,6 +23,7 @@ from airbnb_fixtures import (
     REVIEWS_COLS,
     REVIEWS_ROWS,
 )
+from sql_etl_data_warehouse_inside_airbnb_spark.plans import etl
 from sql_etl_data_warehouse_inside_airbnb_spark.plans.etl import run_pipeline
 
 # measured on local[4] with 4 shuffle partitions (conftest's session)
@@ -41,13 +45,34 @@ def _batch(dirpath, stamp, listings, calendar, reviews):
 
 
 def _jobs(spark, group, fn):
+    """Run ``fn`` in job group ``group`` and return the group's job count.
+
+    Marker jobs in their own groups bracket the call, and every job id
+    between them must belong to ``group``: a worker thread that lost the
+    caller's group would otherwise drop its jobs from the count."""
     sc = spark.sparkContext
-    sc.setLocalProperty("spark.jobGroup.id", group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    tracker = sc.statusTracker()
+
+    def in_group(g, f):
+        sc.setLocalProperty("spark.jobGroup.id", g)
+        try:
+            f()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return sorted(tracker.getJobIdsForGroup(g))
+
+    def marker(tag):
+        (job,) = in_group(f"{group}:{tag}",
+                          lambda: sc.parallelize([0], 1).collect())
+        return job
+
+    first = marker("before")
+    jobs = in_group(group, fn)
+    last = marker("after")
+    assert jobs == list(range(first + 1, last)), (
+        "jobs outside the load's group: "
+        f"{sorted(set(range(first + 1, last)) - set(jobs))}")
+    return len(jobs)
 
 
 def test_etl_job_budget_without_count(spark, tmp_path, monkeypatch):
@@ -74,3 +99,38 @@ def test_etl_job_budget_without_count(spark, tmp_path, monkeypatch):
                                              incremental=True))
     assert full <= FULL_LOAD_JOBS
     assert incremental <= INCREMENTAL_LOAD_JOBS
+
+
+def test_independent_tables_stage_concurrently(spark, tmp_path, monkeypatch):
+    """dim_listings and dim_dates read nothing the other writes, so each
+    write waits at a two-party barrier for the other to be in flight (a
+    serial staging order breaks the barrier); every table's write starts
+    only after the writes of the tables it reads have returned."""
+    src = _batch(tmp_path / "day1", "2025-06-01", LISTINGS_ROWS,
+                 CALENDAR_ROWS, REVIEWS_ROWS)
+    barrier = threading.Barrier(2, timeout=60)
+    lock = threading.Lock()
+    log: list[tuple[str, str]] = []
+    write = etl._write_counted
+
+    def logged(df, path, partition_col=None):
+        name = os.path.basename(path)
+        with lock:
+            log.append(("start", name))
+        if name in ("dim_listings", "dim_dates"):
+            barrier.wait()
+        try:
+            return write(df, path, partition_col)
+        finally:
+            with lock:
+                log.append(("end", name))
+
+    monkeypatch.setattr(etl, "_write_counted", logged)
+    stats = run_pipeline(spark, src, str(tmp_path / "wh")).stats
+    assert set(stats) == {*etl.CORE_TABLES, "rejects_listings"}
+    for table, inputs in (("dim_hosts", ["dim_listings"]),
+                          ("fact_calendar", ["dim_listings"]),
+                          ("fact_reviews", ["dim_listings", "dim_dates"])):
+        for dep in inputs:
+            assert log.index(("end", dep)) < log.index(("start", table)), (
+                table, dep, log)

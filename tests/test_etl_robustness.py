@@ -10,6 +10,7 @@ import glob
 import gzip
 import os
 import shutil
+import threading
 
 import pytest
 
@@ -179,12 +180,9 @@ def test_reject_slices_distinct_for_identical_basenames(spark, tmp_path):
     assert log.count() == 2
 
 
-def test_crash_while_staging_fact_reviews_leaves_day1_live(spark, tmp_path,
-                                                           monkeypatch):
-    """A kill while staging the last table, after every earlier table is
-    staged: nothing was swapped and no journal exists, so the live
-    warehouse still holds day 1, and a retry commits the same batch as
-    an uninterrupted run."""
+def _day1_live_and_day2_reference(spark, tmp_path):
+    """Day 1 loaded into ``wh``, plus the stats of an uninterrupted
+    incremental day-2 load into a copy of it."""
     out = tmp_path / "wh"
     t1 = run_pipeline(spark, str(_day1(tmp_path)), str(out))
     ref = tmp_path / "ref"
@@ -204,7 +202,24 @@ def test_crash_while_staging_fact_reviews_leaves_day1_live(spark, tmp_path,
         [102, 9, "2025-06-09", 79, "Ly", "fine"],
     ])
     want = run_pipeline(spark, str(day2), str(ref), incremental=True).stats
+    return out, day2, t1, want
 
+
+def _assert_day1_live_then_retry_commits(spark, out, day2, t1, want):
+    assert not os.path.exists(out / etl._SWAP_JOURNAL)
+    for name in etl.CORE_TABLES:
+        live = spark.read.parquet(str(out / name))
+        assert live.count() == t1.stats[name], name
+    assert run_pipeline(spark, str(day2), str(out),
+                        incremental=True).stats == want
+
+
+def test_crash_while_staging_fact_reviews_leaves_day1_live(spark, tmp_path,
+                                                           monkeypatch):
+    """A kill while staging fact_reviews, the last table to start: nothing
+    was swapped and no journal exists, so the live warehouse still holds
+    day 1, and a retry commits the same batch as an uninterrupted run."""
+    out, day2, t1, want = _day1_live_and_day2_reference(spark, tmp_path)
     write = etl._write_counted
 
     def killed_at_fact_reviews(df, path, partition_col=None):
@@ -216,10 +231,47 @@ def test_crash_while_staging_fact_reviews_leaves_day1_live(spark, tmp_path,
     with pytest.raises(RuntimeError, match="killed"):
         run_pipeline(spark, str(day2), str(out), incremental=True)
     monkeypatch.undo()
+    _assert_day1_live_then_retry_commits(spark, out, day2, t1, want)
 
-    assert not os.path.exists(out / etl._SWAP_JOURNAL)
-    for name in etl.CORE_TABLES:
-        live = spark.read.parquet(str(out / name))
-        assert live.count() == t1.stats[name], name
-    assert run_pipeline(spark, str(day2), str(out),
-                        incremental=True).stats == want
+
+def test_crash_in_one_write_waits_for_writes_in_flight(spark, tmp_path,
+                                                        monkeypatch):
+    """dim_dates and dim_listings stage concurrently: when the dim_dates
+    write fails while dim_listings is still writing, run_pipeline raises
+    only after that write has returned, leaves no journal and the day-1
+    warehouse live, and a retry commits the same batch as an
+    uninterrupted run."""
+    out, day2, t1, want = _day1_live_and_day2_reference(spark, tmp_path)
+    write = etl._write_counted
+    listings_started = threading.Event()
+    dates_failed = threading.Event()
+    lock = threading.Lock()
+    in_flight: list[str] = []
+    returned: list[str] = []
+
+    def dim_dates_fails(df, path, partition_col=None):
+        name = os.path.basename(path)
+        with lock:
+            in_flight.append(name)
+        try:
+            if name == "dim_dates.__tmp":
+                assert listings_started.wait(60), "dim_listings not started"
+                dates_failed.set()
+                raise RuntimeError("killed while staging dim_dates")
+            if name == "dim_listings.__tmp":
+                listings_started.set()
+                assert dates_failed.wait(60), "dim_dates did not fail"
+            return write(df, path, partition_col)
+        finally:
+            with lock:
+                in_flight.remove(name)
+                returned.append(name)
+
+    monkeypatch.setattr(etl, "_write_counted", dim_dates_fails)
+    with pytest.raises(RuntimeError, match="killed"):
+        run_pipeline(spark, str(day2), str(out), incremental=True)
+    monkeypatch.undo()
+
+    assert not in_flight
+    assert "dim_listings.__tmp" in returned
+    _assert_day1_live_then_retry_commits(spark, out, day2, t1, want)
