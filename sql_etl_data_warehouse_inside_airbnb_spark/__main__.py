@@ -8,9 +8,11 @@ profile raw files before loading (menu option 1).
 
 ``--incremental`` re-loads into an existing warehouse at output_dir
 (MERGE listings, append-if-absent reviews/calendar weeks, stable
-date_ids) instead of rebuilding. ``--reviews-cap`` reproduces the
-reference's >200k-row 80% reviews sampling cap (off by default — it
-drops data; see plans/pipeline.py:cap_reviews). ``--profile`` prints
+date_ids) instead of rebuilding, and needs output_dir. Either load
+commits all-or-nothing: a failed run leaves the previous warehouse.
+``--reviews-cap`` reproduces the reference's >200k-row 80% reviews
+sampling cap (off by default — it drops data; see
+plans/pipeline.py:cap_reviews). ``--profile`` prints
 a per-column EDA profile (nulls, distincts, min/max) of each given
 raw csv.gz, schema-on-read, one Spark job per file. ``--sql`` queries
 a previously built warehouse (the reference's analysis-script menu
@@ -107,6 +109,11 @@ def main(argv: list[str]) -> int:
     incremental = "--incremental" in argv
     reviews_cap = "--reviews-cap" in argv
     argv = [a for a in argv if a not in ("--incremental", "--reviews-cap")]
+    if not argv or (incremental and len(argv) < 2):
+        # --incremental reloads the warehouse at output_dir: without one
+        # there is nothing to reload
+        print(__doc__.strip())
+        return 2
     data_dir = argv[0]
     output_dir = argv[1] if len(argv) > 1 else None
     spark = get_spark("sql-etl-dw-inside-airbnb-etl")

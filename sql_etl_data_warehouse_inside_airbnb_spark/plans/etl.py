@@ -6,17 +6,25 @@ a data directory holding per-city gzip CSVs named
 ``{Country}_{City}_{kind}_{date}.csv.gz`` with kind ∈ {listings,
 calendar, reviews}.
 
-Discovery reads every CSV header in Python (no Spark job) and cleans
-listings with per-file geography. With an output directory each table
-is then materialized exactly once: it is written, its row count rides
-that write as an ``Observation``, and it is read back with its known
-schema, so every dependent reads the written table instead of re-running
-its lineage from the raw CSVs — the reference's own order, where the
-facts join the LOADED dim_listings (sql/data/04_load_calendar.sql:42).
-Each write is submitted to a thread pool as soon as the tables it reads
-are written, in waves along the dependency DAG:
+One load path, as in the reference (one set of MERGE and
+insert-if-absent scripts for day 1 and day N): every table is its reload
+expression against a prior warehouse — the tables read from the output
+directory on an incremental load, or an empty warehouse of ``.limit(0)``
+frames, which the optimizer folds away (OptimizeLimitZero, then
+PropagateEmptyRelation), so a full load plans as the bare new batch.
 
-  0. (incremental only) the six prior-warehouse reads;
+Discovery reads every CSV header in Python (no Spark job). With an
+output directory every load stages each table next to the live one and
+commits the batch (core tables plus this load's rejects slice) through
+one journaled swap, so a failed load, a rebuild included, leaves the
+previous warehouse live. Each table is materialized exactly once: it is
+written, its row count rides that write as an ``Observation``, and it is
+read back with its known schema, so every dependent reads the written
+table — the reference's own order, where the facts join the LOADED
+dim_listings (sql/data/04_load_calendar.sql:42). Each write is submitted
+to a thread pool as soon as the tables it reads are written:
+
+  0. (incremental only) the five prior-warehouse reads;
   1. dim_dates (gap-free union of calendar+review dates) and the rejects
      slice, then — once the MERGE plan's broadcast gate has run —
      dim_listings and the id map;
@@ -104,21 +112,37 @@ CORE_TABLES = ("dim_listings", "dim_listing_id_map", "dim_hosts",
 
 _SWAP_JOURNAL = ".__swap_pending"
 
-# the staging DAG's widest wave is the six prior-table reads; no later
-# wave has more writes in flight, so no submitted task ever queues
+# no wave of the staging DAG has more than six reads or writes in flight
+# (the five prior reads; at most three wave-1 writes still running when
+# the three wave-2 writes start), so no submitted task ever queues
 _DAG_WIDTH = len(CORE_TABLES)
 
 
-def _roll_forward_swaps(output_dir: str) -> None:
-    """Complete a swap a previous run started but didn't finish.
+def _side(output_dir: str, name: str, tag: str) -> str:
+    """Where ``name`` (a path under ``output_dir``) stages (``tag`` is
+    ``.__tmp``) or is set aside while it swaps (``.__old``): the tag goes
+    on the top directory, as a ``load_batch=<id>.__tmp`` directory inside
+    the live ``rejects_listings/`` log would read as one more partition."""
+    top, sep, rest = name.partition("/")
+    return os.path.join(output_dir, top + tag + sep + rest)
 
-    The journal file is written AFTER every staged table is fully
+
+def _move(src: str, dst: str) -> None:
+    os.makedirs(os.path.dirname(dst), exist_ok=True)
+    os.replace(src, dst)
+
+
+def _roll_forward_swaps(output_dir: str) -> None:
+    """Swap in every staged path the journal lists: a batch's commit, or
+    the completion of one a previous run started but didn't finish.
+
+    The journal file is written AFTER every staged path is fully
     materialized and removed only after every swap lands — so its
-    presence means all ``.__tmp`` dirs are complete and committing is
-    always the right move. Rolling FORWARD (not back) keeps the batch
-    atomic: without it, a kill mid-loop leaves a MIXED warehouse
-    (some tables new, some old), and a retry would replay the batch's
-    id-map/reject appends onto already-merged state."""
+    presence means all staged dirs are complete and committing is
+    always the right move. Rolling FORWARD keeps the batch atomic: a
+    kill mid-loop would otherwise leave a MIXED warehouse, onto which a
+    retry replays the batch's id-map append. Each swap renames the live
+    path aside, moves the staged one in, then drops the backup."""
     journal = os.path.join(output_dir, _SWAP_JOURNAL)
     if not os.path.exists(journal):
         return
@@ -126,35 +150,50 @@ def _roll_forward_swaps(output_dir: str) -> None:
         names = [ln.strip() for ln in f if ln.strip()]
     for name in names:
         path = os.path.join(output_dir, name)
-        tmp, old = path + ".__tmp", path + ".__old"
+        top = os.path.join(output_dir, name.split("/")[0])
+        tmp, old = (_side(output_dir, name, ".__tmp"),
+                    _side(output_dir, name, ".__old"))
         if os.path.exists(tmp):
             if os.path.exists(path):
-                shutil.rmtree(old, ignore_errors=True)
-                os.rename(path, old)
-            os.replace(tmp, path)
+                shutil.rmtree(top + ".__old", ignore_errors=True)
+                _move(path, old)
+            _move(tmp, path)
         elif not os.path.exists(path) and os.path.exists(old):
             # died between the two renames of this table's swap
-            os.rename(old, path)
-        shutil.rmtree(old, ignore_errors=True)
+            _move(old, path)
+        shutil.rmtree(top + ".__tmp", ignore_errors=True)
+        shutil.rmtree(top + ".__old", ignore_errors=True)
     os.remove(journal)
+
+
+def _commit(output_dir: str, names: list[str]) -> None:
+    """Swap the staged ``names`` in as one batch. The journal is written
+    after every staged path is complete and before the first swap, and
+    atomically (temp + fsync + rename): a torn journal would roll forward
+    only a PREFIX of the batch — the exact mixed state it prevents."""
+    journal = os.path.join(output_dir, _SWAP_JOURNAL)
+    with open(journal + ".tmp", "w") as jf:
+        jf.write("\n".join(names) + "\n")
+        jf.flush()
+        os.fsync(jf.fileno())
+    os.replace(journal + ".tmp", journal)
+    _roll_forward_swaps(output_dir)
 
 
 def _load_existing(spark: SparkSession, output_dir: str,
                    submit: Callable[..., Future]
                    ) -> dict[str, Future] | None:
     """Prior warehouse state from a previous run's output, or None; each
-    table is read by ``submit`` (so the six footer reads overlap) and
-    arrives as a future of its DataFrame.
+    table a reload reads is read by ``submit`` (so the footer reads
+    overlap) and arrives as a future of its DataFrame. dim_hosts must
+    exist but is not read: it rebuilds from the merged dim_listings.
 
-    Recovery preamble: a journaled half-finished swap is rolled
-    FORWARD first (_roll_forward_swaps); a ``<name>.__old`` without a
-    journal (legacy state) is restored — never treated as an absent
-    warehouse, which would silently full-rebuild from whatever
-    partial data_dir the retry was given.
+    A ``<name>.__old`` without a journal (legacy state) is restored —
+    never treated as an absent warehouse, which would silently
+    full-rebuild from whatever partial data_dir the retry was given.
 
     Schemas are inferred from the files here (not taken from this
     module's plans): the prior warehouse may predate this code."""
-    _roll_forward_swaps(output_dir)
     for name in CORE_TABLES:
         path = os.path.join(output_dir, name)
         old_path = path + ".__old"
@@ -166,7 +205,7 @@ def _load_existing(spark: SparkSession, output_dir: str,
         if not os.path.exists(path):
             return None
     return {name: submit(_read_prior, spark, output_dir, name)
-            for name in CORE_TABLES}
+            for name in _PRIOR_TABLES}
 
 
 def _read_prior(spark: SparkSession, output_dir: str,
@@ -183,6 +222,57 @@ def _read_prior(spark: SparkSession, output_dir: str,
         # batch's new reviews are detected
         df = add_review_lang(df)
     return df
+
+
+# The prior state: each table a reload reads (dim_hosts is rebuilt, not
+# reloaded), with the columns and types the builders produce — a full
+# load persists these, and a narrower stand-in would poison the next
+# incremental run's unionByName.
+_PRIOR_TABLES = {
+    "dim_listings": "listing_id bigint, host_id bigint, host_name string, "
+        "host_city string, host_country string, property_country string, "
+        "property_city string, property_neighbourhood string, "
+        "latitude decimal(9,6), longitude decimal(9,6), price decimal(10,2), "
+        "number_of_reviews bigint, review_scores_rating decimal(3,2), "
+        "calculated_host_listings_count bigint, is_local_host boolean, "
+        "created_date timestamp, updated_date timestamp",
+    "dim_listing_id_map": "listing_id bigint, listing_raw_id string, "
+                          "part1 string, part2 string, part3 string, "
+                          "created_date timestamp",
+    "dim_dates": "date_id int, full_date date, year int, quarter int, "
+                 "month int, month_name string, day int, day_name string, "
+                 "is_weekend boolean",
+    "fact_calendar": "listing_id bigint, week_start_date date, "
+                     "week_end_date date, avg_price_per_week decimal(10,2), "
+                     "available_days_per_week int",
+    "fact_reviews": "review_id bigint, listing_id bigint, date_id int, "
+                    "reviewer_id bigint, reviewer_name string, "
+                    "comments string, review_date date, review_lang string",
+}
+
+
+def _empty_warehouse(spark: SparkSession) -> dict[str, DataFrame]:
+    """``.limit(0)`` is what lets the optimizer fold a reload against this
+    state down to the new batch's plan; an empty local DataFrame alone
+    plans as an RDD scan that folds nothing."""
+    return {name: spark.createDataFrame([], ddl).limit(0)
+            for name, ddl in _PRIOR_TABLES.items()}
+
+
+def _extend_dates(prior: DataFrame, dates: DataFrame) -> DataFrame:
+    """``prior`` plus the dates of ``dates`` it lacks, with IDENTITY
+    semantics: prior date_ids are frozen, and new dates are numbered past
+    their max in date order. Both come from windows over the one union —
+    a separately planned max(date_id) would run a job even against an
+    empty prior."""
+    fresh = (dates.join(prior.select("full_date"), "full_date", "left_anti")
+             .withColumn("date_id", F.lit(None).cast("int")))
+    new_id = (F.coalesce(F.max("date_id").over(Window.partitionBy()),
+                         F.lit(0))
+              + F.row_number().over(Window.orderBy(
+                  F.col("date_id").isNotNull(), "full_date")))
+    return (prior.unionByName(fresh)
+            .withColumn("date_id", F.coalesce("date_id", new_id.cast("int"))))
 
 
 def _has_parquet(path: str) -> bool:
@@ -241,50 +331,36 @@ def _done(value) -> Future:
 _PART_SOURCE = {"fact_calendar": "week_start_date",
                 "fact_reviews": "review_date"}
 
-# empty placeholders carry the REAL table schemas: a 2-column stand-in,
-# once persisted, poisons the next incremental run's unionByName and
-# breaks queries against the documented columns
-_EMPTY = {
-    "dim_dates": "date_id int, full_date date, year int, quarter int, "
-                 "month int, month_name string, day int, day_name string, "
-                 "is_weekend boolean",
-    "fact_calendar": "listing_id bigint, week_start_date date, "
-                     "week_end_date date, avg_price_per_week decimal(10,2), "
-                     "available_days_per_week int",
-    "fact_reviews": "review_id bigint, listing_id bigint, date_id int, "
-                    "reviewer_id bigint, reviewer_name string, "
-                    "comments string, review_date date",
-}
-
 
 def run_pipeline(spark: SparkSession, data_dir: str,
                  output_dir: str | None = None,
                  incremental: bool = False,
                  reviews_cap: bool = False) -> WarehouseTables:
-    """Full ETL. With ``output_dir``, each warehouse table is persisted
-    as Parquet (the typed layer) and ``stats`` holds each table's row
-    count; otherwise everything stays lazy.
+    """Full ETL: each table is its reload onto the prior warehouse — the
+    one at ``output_dir`` when ``incremental=True`` finds it, else an
+    empty one. Listings MERGE-upsert into the prior dim (J8, source
+    wins), id-map rows append, reviews append-if-absent (J4), calendar
+    weeks insert-if-absent on the (listing_id, week_start) PK, dim_dates
+    extends gap-free with STABLE date_ids (IDENTITY semantics), dim_hosts
+    rebuilds from the merged dim (the reference's TRUNCATE + reload).
 
-    ``incremental=True`` loads the prior warehouse from ``output_dir``
-    (if present) and applies the reference's re-load semantics instead
-    of rebuilding: listings MERGE-upsert into the existing dim (J8,
-    source wins), id-map rows append, reviews append-if-absent (J4),
-    calendar weeks insert-if-absent on the (listing_id, week_start)
-    PK, dim_dates extends gap-free with STABLE date_ids (existing ids
-    never renumber — IDENTITY semantics), dim_hosts rebuilds from the
-    merged dim (the reference's TRUNCATE + reload)."""
+    With ``output_dir`` the batch is staged as Parquet (the typed layer)
+    and committed all-or-nothing, and ``stats`` holds each table's row
+    count; otherwise everything stays lazy."""
+    if incremental and not output_dir:
+        raise ValueError("incremental=True reloads the warehouse at "
+                         "output_dir, but no output_dir was given")
     files = discover_files(data_dir)
     if not files["listings"]:
         raise FileNotFoundError(
             f"no '*_listings_*.csv.gz' files under {data_dir}")
 
     if output_dir:
-        # a journaled half-swap from a crashed run is completed FIRST
-        # on every persisted run — including non-incremental rebuilds,
-        # where a surviving stale journal + .__tmp dirs would clobber
-        # the fresh rebuild on the NEXT incremental call
+        # a journaled half-swap from a crashed run is completed FIRST,
+        # before anything reads or stages under output_dir
         _roll_forward_swaps(output_dir)
 
+    targets: dict[str, str] = {}    # staged table -> path in output_dir
     # Leaving this block waits for every submitted write, so a failed
     # one propagates only once no thread still writes under output_dir.
     with ThreadPoolExecutor(max_workers=_DAG_WIDTH) as pool:
@@ -292,24 +368,21 @@ def run_pipeline(spark: SparkSession, data_dir: str,
             # the worker runs its jobs in this thread's job group
             return pool.submit(inheritable_thread_target(spark)(fn), *args)
 
-        prior_reads = (_load_existing(spark, output_dir, submit)
-                       if incremental and output_dir else None)
-        # An incremental load's plans READ the prior tables it replaces,
-        # so every table is staged next to the live one and swapped in
-        # only once all are staged; a full load writes in place.
-        suffix = ".__tmp" if prior_reads is not None else ""
+        reads = (_load_existing(spark, output_dir, submit)
+                 if incremental else None)
         staged: dict[str, Future] = {}
 
-        def _stage(name: str, df: DataFrame) -> None:
-            """Submit table ``name``'s single write; its future yields
-            the table read back, so dependents read the written table
-            rather than re-run ``df``."""
+        def _stage(name: str, df: DataFrame, target: str | None = None
+                   ) -> None:
+            """Submit table ``name``'s single write, staged for
+            ``output_dir/target``; its future yields the table read back,
+            so dependents never re-run ``df``."""
             if not output_dir:
                 staged[name] = _done((df, None, None))
                 return
-            path = os.path.join(output_dir, name) + suffix
-            if suffix:
-                shutil.rmtree(path, ignore_errors=True)
+            targets[name] = target or name
+            path = _side(output_dir, targets[name], ".__tmp")
+            shutil.rmtree(path, ignore_errors=True)
             part_col = None
             if _PART_SOURCE.get(name) in df.columns:
                 part_col = "part_month"
@@ -329,8 +402,8 @@ def run_pipeline(spark: SparkSession, data_dir: str,
                                property_city=city, property_country=country)
             cleaned = c if cleaned is None else cleaned.unionByName(c)
 
-        prior = ({name: fut.result() for name, fut in prior_reads.items()}
-                 if prior_reads is not None else None)
+        prior = ({name: fut.result() for name, fut in reads.items()}
+                 if reads else _empty_warehouse(spark))
 
         if output_dir:
             # S8 reject capture: raw rows whose id can't type, preserved
@@ -338,20 +411,14 @@ def run_pipeline(spark: SparkSession, data_dir: str,
             # logs/listings_skipped_rows.csv) — a cumulative audit log of
             # per-load SLICES, one hive subdirectory per load keyed by a
             # DETERMINISTIC batch id (md5 of the input file names PLUS
-            # each file's size and mtime): a crash retry that reuses the
-            # same files IN PLACE overwrites its own slice instead of
-            # appending a duplicate — a retry that re-downloads
-            # byte-identical inputs gets a fresh mtime and therefore a
-            # new slice (an append, surfaced by the per-run stat;
-            # content-hashing the files would close that at the cost of
-            # re-reading every input). Each load writes only its delta
-            # (never a rewrite of the whole log). The size/mtime
-            # fingerprint keeps two genuinely different loads that ship
-            # identical basenames (undated feeds like
-            # ``listings.csv.gz``) from colliding on one slice and
-            # silently overwriting the earlier load's rejects. The STAT
-            # reports THIS run's rejects, so per-run monitoring doesn't
-            # over-report on day 2+.
+            # each file's size and mtime): re-running the same files IN
+            # PLACE replaces its own slice — re-downloaded identical
+            # inputs get a fresh mtime and so a new slice (content
+            # hashes would re-read every input) — while two different
+            # loads that ship identical basenames (undated feeds like
+            # ``listings.csv.gz``) never collide. The slice commits with
+            # the batch, so a failed load leaves none. The STAT reports
+            # THIS run's rejects only.
             _, rejects = split_quarantine(cleaned, "id")
             rejects = rejects.withColumn("reject_reason",
                                          F.lit("listing_id_cast_failed"))
@@ -361,10 +428,8 @@ def run_pipeline(spark: SparkSession, data_dir: str,
                                         os.stat(p).st_mtime_ns)
                 for k in sorted(files)
                 for p, _, _ in files[k]).encode()).hexdigest()[:16]
-            slice_dir = os.path.join(output_dir, "rejects_listings",
-                                     f"load_batch={batch_id}")
-            staged["rejects_listings"] = submit(_write_counted, rejects,
-                                                slice_dir)
+            _stage("rejects_listings", rejects,
+                   f"rejects_listings/load_batch={batch_id}")
 
         def _union(kind: str) -> DataFrame | None:
             df = None
@@ -391,136 +456,69 @@ def run_pipeline(spark: SparkSession, data_dir: str,
         else:
             reviews_raw = _union("reviews")
 
+        # a kind with no files this run keeps its prior table as is
+        # (an empty frame would orphan every date_id FK in fact_reviews)
+        dim_dates = prior["dim_dates"]
         date_sources = [d for d in (calendar_raw, reviews_raw)
                         if d is not None]
         if date_sources:
-            dim_dates = build_dim_dates(*date_sources)
-            if prior:
-                # IDENTITY semantics: existing date_ids are frozen; only
-                # dates the prior dimension lacks get new ids, numbered
-                # past its max
-                prior_dates = prior["dim_dates"]
-                fresh = (dim_dates.drop("date_id")
-                         .join(prior_dates.select("full_date"), "full_date",
-                               "left_anti"))
-                max_id = F.broadcast(
-                    prior_dates.agg(F.max("date_id").alias("__max_id")))
-                fresh = (fresh.crossJoin(max_id)
-                         .withColumn("date_id",
-                                     (F.row_number().over(
-                                         Window.orderBy("full_date"))
-                                      + F.coalesce("__max_id", F.lit(0)))
-                                     .cast("int"))
-                         .drop("__max_id"))
-                dim_dates = prior_dates.unionByName(
-                    fresh.select(*prior_dates.columns))
-        elif prior:
-            # no date-bearing files this run: KEEP the accumulated date
-            # dimension (overwriting it with an empty frame would orphan
-            # every date_id FK in fact_reviews)
-            dim_dates = prior["dim_dates"]
-        else:
-            dim_dates = spark.createDataFrame([], _EMPTY["dim_dates"])
+            dim_dates = _extend_dates(dim_dates,
+                                      build_dim_dates(*date_sources))
         _stage("dim_dates", dim_dates)
 
         # builds the MERGE plan, whose broadcast gate runs eager jobs
         # here while dim_dates and the rejects slice write
         merge_res, id_map = build_dim_listings(
-            cleaned, existing=prior["dim_listings"] if prior else None,
-            count_actions=False)
+            cleaned, existing=prior["dim_listings"], count_actions=False)
         # post-load enrichment (the reference's pretreatment UPDATEs):
         # US-state -> country fix + is_local_host, recomputed every run
         _stage("dim_listings", pretreat_listings(merge_res.df))
-        if prior:
-            # the id map is a per-LOAD audit trail (reference inserts one
-            # row per source row every batch, data_loader.py:292-300), so
-            # a re-sent listing in a new batch appends by design — unlike
-            # the PK-keyed facts, which dedupe. Same-batch retries are
-            # handled upstream: the journaled all-or-nothing swap
-            # (_roll_forward_swaps) means a crashed run either committed
-            # the WHOLE batch (journal present → rolled forward) or none
-            # of it — a retry never replays appends onto a half-merged
-            # warehouse. Deliberately re-running a committed batch is a
-            # new load and appends again, the reference's own semantics.
-            id_map = prior["dim_listing_id_map"].unionByName(id_map)
-        _stage("dim_listing_id_map", id_map)
+        # the id map is a per-LOAD audit trail (reference inserts one row
+        # per source row every batch, data_loader.py:292-300), so a
+        # re-sent listing in a new batch appends by design — unlike the
+        # PK-keyed facts, which dedupe. The all-or-nothing commit means a
+        # crashed run either committed the WHOLE batch or none of it, so
+        # a retry never replays appends onto a half-merged warehouse.
+        # Deliberately re-running a committed batch is a new load and
+        # appends again, the reference's own semantics.
+        _stage("dim_listing_id_map",
+               prior["dim_listing_id_map"].unionByName(id_map))
 
         dim_listings = _written("dim_listings")
         _stage("dim_hosts", pretreat_hosts(build_dim_hosts(dim_listings)))
+        fact_calendar = prior["fact_calendar"]
         if calendar_raw is not None:
-            fact_calendar = build_fact_calendar(calendar_raw, dim_listings)
-            if prior:
-                # insert-if-absent on the (listing_id, week_start_date)
-                # PK — T-SQL MERGE-free re-load: existing weeks keep
-                # their rows
-                fact_calendar = prior["fact_calendar"].unionByName(
-                    fact_calendar.join(
-                        prior["fact_calendar"]
-                        .select("listing_id", "week_start_date"),
-                        ["listing_id", "week_start_date"], "left_anti"))
-        elif prior:
-            fact_calendar = prior["fact_calendar"]
-        else:
-            fact_calendar = spark.createDataFrame([],
-                                                  _EMPTY["fact_calendar"])
+            # insert-if-absent on the (listing_id, week_start_date) PK —
+            # T-SQL MERGE-free re-load: prior weeks keep their rows
+            week = ["listing_id", "week_start_date"]
+            fact_calendar = fact_calendar.unionByName(
+                build_fact_calendar(calendar_raw, dim_listings)
+                .join(fact_calendar.select(week), week, "left_anti"))
         _stage("fact_calendar", fact_calendar)
 
+        fact_reviews = prior["fact_reviews"]
         if reviews_raw is not None:
             # language detection runs on this batch's new reviews only;
             # prior rows keep their stored review_lang
-            fact_reviews = add_review_lang(build_fact_reviews(
-                reviews_raw, dim_listings, _written("dim_dates"),
-                existing=prior["fact_reviews"] if prior else None))
-            if prior:
-                fact_reviews = prior["fact_reviews"].unionByName(
-                    fact_reviews)
-        elif prior:
-            fact_reviews = prior["fact_reviews"]
-        else:
-            fact_reviews = add_review_lang(
-                spark.createDataFrame([], _EMPTY["fact_reviews"]))
+            fact_reviews = fact_reviews.unionByName(add_review_lang(
+                build_fact_reviews(reviews_raw, dim_listings,
+                                   _written("dim_dates"),
+                                   existing=fact_reviews)))
         _stage("fact_reviews", fact_reviews)
 
         results = {name: fut.result() for name, fut in staged.items()}
 
     stats: dict[str, int] = {}
+    frames = {name: results[name][0] for name in CORE_TABLES}
     if output_dir:
-        stats = {name: results[name][1] for name in CORE_TABLES}
-        stats["rejects_listings"] = results["rejects_listings"]
-    tables = WarehouseTables(*(results[name][0] for name in CORE_TABLES),
-                             stats=stats)
-    if suffix:
-        # journal AFTER all staging is materialized, BEFORE the
-        # first swap: its presence promises every .__tmp is
-        # complete, so recovery always rolls FORWARD (atomic
-        # batch commit — see _roll_forward_swaps). Written
-        # atomically (temp + fsync + rename): a torn journal
-        # would roll forward only a PREFIX of the batch — the
-        # exact mixed state the mechanism exists to prevent.
-        journal = os.path.join(output_dir, _SWAP_JOURNAL)
-        with open(journal + ".tmp", "w") as jf:
-            jf.write("\n".join(CORE_TABLES) + "\n")
-            jf.flush()
-            os.fsync(jf.fileno())
-        os.replace(journal + ".tmp", journal)
-        for name in CORE_TABLES:
-            # crash-safe swap: rename the live table aside, move
-            # the staged one in, then drop the backup. A kill in
-            # the window leaves <name>.__old, which _load_existing
-            # restores — never an rmtree'd hole that would silently
-            # trigger a full rebuild over a partial data_dir.
-            final_path = os.path.join(output_dir, name)
-            old_path = final_path + ".__old"
-            shutil.rmtree(old_path, ignore_errors=True)
-            if os.path.exists(final_path):
-                os.rename(final_path, old_path)
-            os.replace(final_path + suffix, final_path)
-            shutil.rmtree(old_path, ignore_errors=True)
-            # the staged read-back pointed at the moved .__tmp dir
-            setattr(tables, name, _read_back(spark, final_path,
-                                             results[name][2]))
-        # all core swaps landed: the batch is committed
-        os.remove(journal)
+        stats = {name: results[name][1]
+                 for name in (*CORE_TABLES, "rejects_listings")}
+        _commit(output_dir, list(targets.values()))
+        # the staged read-backs pointed at the moved staging dirs
+        frames = {name: _read_back(spark, os.path.join(output_dir, name),
+                                   results[name][2])
+                  for name in CORE_TABLES}
+    tables = WarehouseTables(**frames, stats=stats)
     # the whole star schema is the SQL surface, not just the views
     for name in CORE_TABLES:
         getattr(tables, name).createOrReplaceTempView(name)

@@ -4,7 +4,8 @@ on that write, and reads headers in Python, so a full and an incremental
 load of the messy Airbnb fixtures stay within a pinned number of Spark
 jobs and never call DataFrame.count(). Each table's write is submitted
 as soon as the tables it reads are written, so independent tables write
-concurrently."""
+concurrently. A full load is the reload onto an empty warehouse, which
+the optimizer folds out of every plan."""
 
 from __future__ import annotations
 
@@ -28,7 +29,7 @@ from sql_etl_data_warehouse_inside_airbnb_spark.plans.etl import run_pipeline
 
 # measured on local[4] with 4 shuffle partitions (conftest's session)
 FULL_LOAD_JOBS = 21
-INCREMENTAL_LOAD_JOBS = 34
+INCREMENTAL_LOAD_JOBS = 32
 
 
 def _batch(dirpath, stamp, listings, calendar, reviews):
@@ -117,7 +118,7 @@ def test_independent_tables_stage_concurrently(spark, tmp_path, monkeypatch):
         name = os.path.basename(path)
         with lock:
             log.append(("start", name))
-        if name in ("dim_listings", "dim_dates"):
+        if name in ("dim_listings.__tmp", "dim_dates.__tmp"):
             barrier.wait()
         try:
             return write(df, path, partition_col)
@@ -132,5 +133,45 @@ def test_independent_tables_stage_concurrently(spark, tmp_path, monkeypatch):
                           ("fact_calendar", ["dim_listings"]),
                           ("fact_reviews", ["dim_listings", "dim_dates"])):
         for dep in inputs:
-            assert log.index(("end", dep)) < log.index(("start", table)), (
+            assert (log.index(("end", dep + ".__tmp"))
+                    < log.index(("start", table + ".__tmp"))), (
                 table, dep, log)
+
+
+def _children(node) -> list:
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def test_full_load_folds_the_empty_prior(spark, tmp_path, monkeypatch):
+    """A full load is the reload onto an empty warehouse, and the optimizer
+    folds that warehouse away: no staged write's optimized plan keeps a
+    Join or Union with an empty LocalRelation leg, and every plan reads
+    only files, never an in-memory frame."""
+    src = _batch(tmp_path / "day1", "2025-06-01", LISTINGS_ROWS,
+                 CALENDAR_ROWS, REVIEWS_ROWS)
+    plans: dict[str, object] = {}
+    write = etl._write_counted
+
+    def captured(df, path, partition_col=None):
+        plans[os.path.basename(path)] = \
+            df._jdf.queryExecution().optimizedPlan()
+        return write(df, path, partition_col)
+
+    monkeypatch.setattr(etl, "_write_counted", captured)
+    run_pipeline(spark, src, str(tmp_path / "wh"))
+    assert {f"{n}.__tmp" for n in etl.CORE_TABLES} <= set(plans)
+    for name, plan in plans.items():
+        empty_legs, leaves, stack = [], set(), [plan]
+        while stack:
+            node = stack.pop()
+            kids = _children(node)
+            if not kids:
+                leaves.add(node.nodeName())
+            if node.nodeName() in ("Join", "Union"):
+                empty_legs += [node.nodeName() for k in kids
+                               if k.nodeName() == "LocalRelation"
+                               and k.data().isEmpty()]
+            stack += kids
+        assert not empty_legs, (name, plan.toString())
+        assert leaves == {"LogicalRelation"}, (name, leaves)

@@ -275,3 +275,69 @@ def test_crash_in_one_write_waits_for_writes_in_flight(spark, tmp_path,
     assert not in_flight
     assert "dim_listings.__tmp" in returned
     _assert_day1_live_then_retry_commits(spark, out, day2, t1, want)
+
+
+def test_failed_rebuild_leaves_previous_warehouse_live(spark, tmp_path,
+                                                       monkeypatch):
+    """A full (non-incremental) load over an existing warehouse stages
+    and commits like an incremental one: when one staged write fails,
+    every table of the previous warehouse stays live with its row count
+    and no journal is left."""
+    out = tmp_path / "wh"
+    t1 = run_pipeline(spark, str(_day1(tmp_path)), str(out))
+    rebuild = tmp_path / "rebuild"
+    rebuild.mkdir()
+    _wgz(rebuild, "France_Paris_listings_2025-06-08.csv.gz", LISTING_COLS, [
+        [102, 9002, "Bob", "Lyon, France", "Opera", "48.87", "2.33",
+         "$80.00", "5", "4.00", "1"],
+        ["bad-id", 9003, "Eve", "", "", "", "", "", "", "", ""],
+    ])
+    _wgz(rebuild, "France_Paris_reviews_2025-06-08.csv.gz", REVIEW_COLS, [
+        [102, 9, "2025-06-09", 79, "Ly", "fine"],
+    ])
+    write = etl._write_counted
+
+    def killed_at_fact_reviews(df, path, partition_col=None):
+        if os.path.basename(path).startswith("fact_reviews"):
+            raise RuntimeError("killed while writing fact_reviews")
+        return write(df, path, partition_col)
+
+    monkeypatch.setattr(etl, "_write_counted", killed_at_fact_reviews)
+    with pytest.raises(RuntimeError, match="killed"):
+        run_pipeline(spark, str(rebuild), str(out))
+    monkeypatch.undo()
+    assert not os.path.exists(out / etl._SWAP_JOURNAL)
+    for name in etl.CORE_TABLES:
+        live = spark.read.parquet(str(out / name))
+        assert live.count() == t1.stats[name], name
+
+
+def test_failed_load_commits_no_rejects_slice(spark, tmp_path, monkeypatch):
+    """The rejects slice commits with the batch: a load that fails in a
+    staged write leaves no new slice in the log, and its retry writes the
+    slice once and gives the uninterrupted run's stats."""
+    out, day2, t1, want = _day1_live_and_day2_reference(spark, tmp_path)
+
+    def slices():
+        return set(glob.glob(os.path.join(str(out), "rejects_listings",
+                                          "load_batch=*")))
+
+    day1_slices = slices()
+    write = etl._write_counted
+
+    def killed_at_fact_calendar(df, path, partition_col=None):
+        if os.path.basename(path) == "fact_calendar.__tmp":
+            raise RuntimeError("killed while staging fact_calendar")
+        return write(df, path, partition_col)
+
+    monkeypatch.setattr(etl, "_write_counted", killed_at_fact_calendar)
+    with pytest.raises(RuntimeError, match="killed"):
+        run_pipeline(spark, str(day2), str(out), incremental=True)
+    monkeypatch.undo()
+    assert slices() == day1_slices
+    assert run_pipeline(spark, str(day2), str(out),
+                        incremental=True).stats == want
+    assert len(slices() - day1_slices) == 1
+    log = spark.read.parquet(os.path.join(str(out), "rejects_listings"))
+    assert log.count() == t1.stats["rejects_listings"] + want[
+        "rejects_listings"]
