@@ -16,22 +16,27 @@ plans/pipeline.py:cap_reviews). ``--profile`` prints
 a per-column EDA profile (nulls, distincts, min/max) of each given
 raw csv.gz, schema-on-read, one Spark job per file. ``--sql`` queries
 a previously built warehouse (the reference's analysis-script menu
-entries): every dim_*/fact_* parquet directory registers as a view,
-the three vw_* analytical views are created, and the statement runs
+entries): its six dim_*/fact_* tables and rejects_listings register as
+views, the three vw_* analytical views are created, and the statement runs
 in the chosen dialect. The default ``--dialect tsql`` translates the
 reference's own analysis surface (SELECT TOP, CONVERT, LEN, ISNULL,
 DATEADD/DATEDIFF) through functions/tsql.py — T-SQL NAMES get T-SQL
 SEMANTICS there (LEN ignores trailing spaces; 3-arg DATEDIFF counts
 boundary crossings; Spark's own 2-arg datediff passes through), and
 anything outside the shim's scope raises rather than mistranslating.
-Pass ``--dialect spark`` to run untranslated Spark SQL.
+Pass ``--dialect spark`` to run untranslated Spark SQL. A warehouse
+with a pending commit journal (a load killed mid-commit) is refused with
+exit 2 until the next load completes it.
 """
 
 from __future__ import annotations
 
 import sys
 
-from sql_etl_data_warehouse_inside_airbnb_spark.plans.etl import run_pipeline
+from sql_etl_data_warehouse_inside_airbnb_spark.plans.etl import (
+    CORE_TABLES,
+    run_pipeline,
+)
 from sql_etl_data_warehouse_inside_airbnb_spark.session import get_spark
 
 
@@ -82,24 +87,21 @@ def main(argv: list[str]) -> int:
         from sql_etl_data_warehouse_inside_airbnb_spark.plans.pipeline import (
             register_views,
         )
+        from sql_etl_data_warehouse_inside_airbnb_spark.sources import commit
         wh, query = args
+        journal = commit.pending(wh)
+        if journal:
+            # its tables may be mid-swap: some of the batch in, some not
+            print(f"{wh}: a load is mid-commit (journal {journal}); the "
+                  "next load into it completes the commit", file=sys.stderr)
+            return 2
         spark = get_spark("sql-etl-dw-inside-airbnb-sql")
         spark.sparkContext.setLogLevel("ERROR")
         register_sql_functions(spark)
-        dim_listings = None
-        for entry in sorted(os.listdir(wh)):
-            path = os.path.join(wh, entry)
-            if not os.path.isdir(path):
-                continue
-            try:
-                df = spark.read.parquet(path)
-            except Exception:  # noqa: BLE001 - non-table dir, skip
-                continue
-            df.createOrReplaceTempView(entry)
-            if entry == "dim_listings":
-                dim_listings = df
-        if dim_listings is not None:
-            register_views(spark, dim_listings)
+        for name in (*CORE_TABLES, "rejects_listings"):
+            spark.read.parquet(os.path.join(wh, name)) \
+                .createOrReplaceTempView(name)
+        register_views(spark, spark.table("dim_listings"))
         out = (run_tsql(spark, query) if dialect == "tsql"
                else spark.sql(query))
         out.show(n=100, truncate=32)

@@ -14,15 +14,16 @@ frames, which the optimizer folds away (OptimizeLimitZero, then
 PropagateEmptyRelation), so a full load plans as the bare new batch.
 
 Discovery reads every CSV header in Python (no Spark job). With an
-output directory every load stages each table next to the live one and
-commits the batch (core tables plus this load's rejects slice) through
-one journaled swap, so a failed load, a rebuild included, leaves the
-previous warehouse live. Each table is materialized exactly once: it is
-written, its row count rides that write as an ``Observation``, and it is
-read back with its known schema, so every dependent reads the written
-table — the reference's own order, where the facts join the LOADED
-dim_listings (sql/data/04_load_calendar.sql:42). Each write is submitted
-to a thread pool as soon as the tables it reads are written:
+output directory every load stages each table as a hidden sibling of the
+live one and commits the batch (core tables plus this load's rejects
+slice) as one ``sources/commit.py`` batch, so a failed load, a rebuild
+included, leaves the previous warehouse live and no staged copy. Each
+table is materialized exactly once: it is written, its row count rides
+that write as an ``Observation``, and it is read back with its known
+schema, so every dependent reads the written table — the reference's
+own order, where the facts join the LOADED dim_listings
+(sql/data/04_load_calendar.sql:42). Each write is submitted to a thread
+pool as soon as the tables it reads are written:
 
   0. (incremental only) the five prior-warehouse reads;
   1. dim_dates (gap-free union of calendar+review dates) and the rejects
@@ -47,9 +48,9 @@ from __future__ import annotations
 import hashlib
 import os
 import re
-import shutil
 from collections.abc import Callable
 from concurrent.futures import Future, ThreadPoolExecutor
+from contextlib import nullcontext
 from dataclasses import dataclass, field
 from glob import glob
 
@@ -72,6 +73,7 @@ from sql_etl_data_warehouse_inside_airbnb_spark.plans.enrich import (
     pretreat_hosts,
     pretreat_listings,
 )
+from sql_etl_data_warehouse_inside_airbnb_spark.sources import commit
 from sql_etl_data_warehouse_inside_airbnb_spark.sources.io import (
     csv_header,
     read_csv_raw,
@@ -110,74 +112,10 @@ CORE_TABLES = ("dim_listings", "dim_listing_id_map", "dim_hosts",
                "dim_dates", "fact_calendar", "fact_reviews")
 
 
-_SWAP_JOURNAL = ".__swap_pending"
-
 # no wave of the staging DAG has more than six reads or writes in flight
 # (the five prior reads; at most three wave-1 writes still running when
 # the three wave-2 writes start), so no submitted task ever queues
 _DAG_WIDTH = len(CORE_TABLES)
-
-
-def _side(output_dir: str, name: str, tag: str) -> str:
-    """Where ``name`` (a path under ``output_dir``) stages (``tag`` is
-    ``.__tmp``) or is set aside while it swaps (``.__old``): the tag goes
-    on the top directory, as a ``load_batch=<id>.__tmp`` directory inside
-    the live ``rejects_listings/`` log would read as one more partition."""
-    top, sep, rest = name.partition("/")
-    return os.path.join(output_dir, top + tag + sep + rest)
-
-
-def _move(src: str, dst: str) -> None:
-    os.makedirs(os.path.dirname(dst), exist_ok=True)
-    os.replace(src, dst)
-
-
-def _roll_forward_swaps(output_dir: str) -> None:
-    """Swap in every staged path the journal lists: a batch's commit, or
-    the completion of one a previous run started but didn't finish.
-
-    The journal file is written AFTER every staged path is fully
-    materialized and removed only after every swap lands — so its
-    presence means all staged dirs are complete and committing is
-    always the right move. Rolling FORWARD keeps the batch atomic: a
-    kill mid-loop would otherwise leave a MIXED warehouse, onto which a
-    retry replays the batch's id-map append. Each swap renames the live
-    path aside, moves the staged one in, then drops the backup."""
-    journal = os.path.join(output_dir, _SWAP_JOURNAL)
-    if not os.path.exists(journal):
-        return
-    with open(journal) as f:
-        names = [ln.strip() for ln in f if ln.strip()]
-    for name in names:
-        path = os.path.join(output_dir, name)
-        top = os.path.join(output_dir, name.split("/")[0])
-        tmp, old = (_side(output_dir, name, ".__tmp"),
-                    _side(output_dir, name, ".__old"))
-        if os.path.exists(tmp):
-            if os.path.exists(path):
-                shutil.rmtree(top + ".__old", ignore_errors=True)
-                _move(path, old)
-            _move(tmp, path)
-        elif not os.path.exists(path) and os.path.exists(old):
-            # died between the two renames of this table's swap
-            _move(old, path)
-        shutil.rmtree(top + ".__tmp", ignore_errors=True)
-        shutil.rmtree(top + ".__old", ignore_errors=True)
-    os.remove(journal)
-
-
-def _commit(output_dir: str, names: list[str]) -> None:
-    """Swap the staged ``names`` in as one batch. The journal is written
-    after every staged path is complete and before the first swap, and
-    atomically (temp + fsync + rename): a torn journal would roll forward
-    only a PREFIX of the batch — the exact mixed state it prevents."""
-    journal = os.path.join(output_dir, _SWAP_JOURNAL)
-    with open(journal + ".tmp", "w") as jf:
-        jf.write("\n".join(names) + "\n")
-        jf.flush()
-        os.fsync(jf.fileno())
-    os.replace(journal + ".tmp", journal)
-    _roll_forward_swaps(output_dir)
 
 
 def _load_existing(spark: SparkSession, output_dir: str,
@@ -188,22 +126,11 @@ def _load_existing(spark: SparkSession, output_dir: str,
     overlap) and arrives as a future of its DataFrame. dim_hosts must
     exist but is not read: it rebuilds from the merged dim_listings.
 
-    A ``<name>.__old`` without a journal (legacy state) is restored —
-    never treated as an absent warehouse, which would silently
-    full-rebuild from whatever partial data_dir the retry was given.
-
     Schemas are inferred from the files here (not taken from this
     module's plans): the prior warehouse may predate this code."""
-    for name in CORE_TABLES:
-        path = os.path.join(output_dir, name)
-        old_path = path + ".__old"
-        if os.path.exists(old_path):
-            if os.path.exists(path):
-                shutil.rmtree(old_path)      # died after swap: stale
-            else:
-                os.rename(old_path, path)    # died mid-swap: restore
-        if not os.path.exists(path):
-            return None
+    if not all(os.path.exists(os.path.join(output_dir, name))
+               for name in CORE_TABLES):
+        return None
     return {name: submit(_read_prior, spark, output_dir, name)
             for name in _PRIOR_TABLES}
 
@@ -355,15 +282,12 @@ def run_pipeline(spark: SparkSession, data_dir: str,
         raise FileNotFoundError(
             f"no '*_listings_*.csv.gz' files under {data_dir}")
 
-    if output_dir:
-        # a journaled half-swap from a crashed run is completed FIRST,
-        # before anything reads or stages under output_dir
-        _roll_forward_swaps(output_dir)
-
-    targets: dict[str, str] = {}    # staged table -> path in output_dir
-    # Leaving this block waits for every submitted write, so a failed
-    # one propagates only once no thread still writes under output_dir.
-    with ThreadPoolExecutor(max_workers=_DAG_WIDTH) as pool:
+    # The batch recovers output_dir before anything reads or stages under
+    # it. Leaving the pool waits for every submitted write, so the batch
+    # commits, or on a failure drops its staged copies, only once no
+    # thread still writes under output_dir.
+    with (commit.Batch(output_dir) if output_dir else nullcontext()) \
+            as batch, ThreadPoolExecutor(max_workers=_DAG_WIDTH) as pool:
         def submit(fn, *args) -> Future:
             # the worker runs its jobs in this thread's job group
             return pool.submit(inheritable_thread_target(spark)(fn), *args)
@@ -380,9 +304,7 @@ def run_pipeline(spark: SparkSession, data_dir: str,
             if not output_dir:
                 staged[name] = _done((df, None, None))
                 return
-            targets[name] = target or name
-            path = _side(output_dir, targets[name], ".__tmp")
-            shutil.rmtree(path, ignore_errors=True)
+            path = batch.stage(target or name)
             part_col = None
             if _PART_SOURCE.get(name) in df.columns:
                 part_col = "part_month"
@@ -513,7 +435,6 @@ def run_pipeline(spark: SparkSession, data_dir: str,
     if output_dir:
         stats = {name: results[name][1]
                  for name in (*CORE_TABLES, "rejects_listings")}
-        _commit(output_dir, list(targets.values()))
         # the staged read-backs pointed at the moved staging dirs
         frames = {name: _read_back(spark, os.path.join(output_dir, name),
                                    results[name][2])

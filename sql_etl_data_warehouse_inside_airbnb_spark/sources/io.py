@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from sql_etl_data_warehouse_inside_airbnb_spark.sources import commit
+
 
 def _all_string_schema(columns: list[str]) -> StructType:
     return StructType([StructField(c, StringType(), True) for c in columns])
@@ -321,8 +323,8 @@ def compact_parquet(spark: SparkSession, path: str,
     per-batch MERGE rewrites leave thousands of KB-sized files, and
     scan throughput collapses under per-file open/footer overhead
     long before data volume matters. Compaction = read, coalesce to
-    ceil(bytes / target), rewrite atomically (temp dir + rename), so
-    readers never observe a half-written table.
+    ceil(bytes / target), rewrite as one ``sources/commit.py`` batch,
+    so readers never observe a half-written table.
 
     ``partition_cols`` preserves hive partitioning: rows are
     repartitioned on (partition key, salt) so each hive partition's
@@ -342,7 +344,6 @@ def compact_parquet(spark: SparkSession, path: str,
     """
     import math
     import os
-    import shutil
 
     def _stats(p):
         files, total = 0, 0
@@ -353,53 +354,38 @@ def compact_parquet(spark: SparkSession, path: str,
                     total += os.path.getsize(os.path.join(root, n))
         return files, total
 
-    backup = path.rstrip("/") + "._compact_old"
-    # recovery from an interrupted prior run: the swap below only
-    # ever leaves (a) backup+path both present (died before cleanup —
-    # drop the stale backup) or (b) backup without path (died between
-    # the two renames — the backup IS the table, restore it)
-    if os.path.isdir(backup):
-        if os.path.isdir(path):
-            shutil.rmtree(backup)
+    with commit.Batch(path) as batch:
+        files_before, total_bytes = _stats(path)
+        n_files = max(1, math.ceil(total_bytes / (target_file_mb << 20)))
+        df = spark.read.parquet(path)
+        tmp = batch.stage()
+        if partition_cols:
+            # repartition on the partition key ALONE would hash every row
+            # of one hive partition into a single task and emit exactly
+            # one file per value regardless of size. A salt spreads each
+            # value over ~its-bytes/target tasks (average-based), and
+            # maxRecordsPerFile (from measured avg row size) hard-caps
+            # file size even when one partition is far above average.
+            # one aggregate pass yields both stats (row count + distinct
+            # partition values) instead of two full-table actions
+            stats_row = (df.groupBy(*partition_cols).count()
+                         .agg(F.sum("count").alias("__rows"),
+                              F.count("*").alias("__vals")).first())
+            n_rows = stats_row["__rows"] or 0
+            n_values = max(1, stats_row["__vals"])
+            n_salt = max(1, math.ceil(total_bytes / n_values
+                                      / (target_file_mb << 20)))
+            rpf = max(1, int(n_rows * (target_file_mb << 20)
+                             / max(total_bytes, 1)))
+            salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]),
+                          F.lit(n_salt))
+            (df.repartition(max(n_files, n_values), *partition_cols, salt)
+             .write.mode("overwrite")
+             .option("maxRecordsPerFile", rpf)
+             .partitionBy(*partition_cols)
+             .parquet(tmp))
         else:
-            os.rename(backup, path)
-
-    files_before, total_bytes = _stats(path)
-    n_files = max(1, math.ceil(total_bytes / (target_file_mb << 20)))
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + "._compact_tmp"
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)  # leftover staging from a killed write
-    if partition_cols:
-        # repartition on the partition key ALONE would hash every row
-        # of one hive partition into a single task and emit exactly
-        # one file per value regardless of size. A salt spreads each
-        # value over ~its-bytes/target tasks (average-based), and
-        # maxRecordsPerFile (from measured avg row size) hard-caps
-        # file size even when one partition is far above average.
-        # one aggregate pass yields both stats (row count + distinct
-        # partition values) instead of two full-table actions
-        stats_row = (df.groupBy(*partition_cols).count()
-                     .agg(F.sum("count").alias("__rows"),
-                          F.count("*").alias("__vals")).first())
-        n_rows = stats_row["__rows"] or 0
-        n_values = max(1, stats_row["__vals"])
-        n_salt = max(1, math.ceil(total_bytes / n_values
-                                  / (target_file_mb << 20)))
-        rpf = max(1, int(n_rows * (target_file_mb << 20)
-                         / max(total_bytes, 1)))
-        salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]),
-                      F.lit(n_salt))
-        (df.repartition(max(n_files, n_values), *partition_cols, salt)
-         .write.mode("overwrite")
-         .option("maxRecordsPerFile", rpf)
-         .partitionBy(*partition_cols)
-         .parquet(tmp))
-    else:
-        df.coalesce(n_files).write.mode("overwrite").parquet(tmp)
-    os.rename(path, backup)
-    os.rename(tmp, path)
-    shutil.rmtree(backup)
+            df.coalesce(n_files).write.mode("overwrite").parquet(tmp)
     files_after, _ = _stats(path)
     return {"files_before": files_before, "files_after": files_after,
             "bytes": total_bytes}
@@ -419,15 +405,19 @@ def erase_keys(spark: SparkSession, path: str, key_col: str,
     - ``partition_cols`` set (the production shape): a semi join of
       the table against the (broadcast — erasure batches are small)
       key set finds the AFFECTED partitions; only those directories
-      are rewritten, each through the same temp-dir + rename-atomic
-      swap compaction uses, and every untouched partition's files are
-      left byte-identical (asserted by the s17 probe). Cost ∝ data
-      under affected partitions, not table size. Partitioning the
-      table by a key bucket (e.g. ``key div N``) makes erasure's
+      are rewritten and swapped in as one journaled
+      ``sources/commit.py`` batch, and every untouched partition's
+      files are left byte-identical (asserted by the s17 probe). Cost
+      ∝ data under affected partitions, not table size. Partitioning
+      the table by a key bucket (e.g. ``key div N``) makes erasure's
       rewrite set minimal BY LAYOUT — the same locality argument as
       partition pruning for reads.
     - no ``partition_cols``: whole-table anti-join rewrite behind one
       atomic swap (small tables / the fallback).
+
+    A fully erased partition (or table) is removed outright: hive has
+    no directory for an empty partition, and an empty parquet dir
+    cannot be re-read.
 
     The anti join broadcasts the key set; nothing shuffles the table.
     Returns {"rows_erased", "partitions_rewritten"} for the erasure
@@ -437,103 +427,12 @@ def erase_keys(spark: SparkSession, path: str, key_col: str,
     tombstoned copies linger, which IS the compliance semantics).
     """
     import os
-    import shutil
-
-    root = path.rstrip("/")
-    stage = root + "._erase_stage"   # OUTSIDE the table root: partition
-    # discovery must never see half-written staging files as data
-    # (compact_parquet's discipline). Stale staging from a killed run
-    # is discardable — the data is still in the target or its backup.
-    if os.path.isdir(stage):
-        shutil.rmtree(stage)
-
-    # Backups are siblings of their target with a DOT-PREFIXED leaf:
-    # ``<parent>/.<leaf>._erase_old``. The dot matters: partition
-    # backups live INSIDE the table root, and Spark's file index only
-    # hides names starting with ``.`` or ``_`` — an undotted
-    # ``bucket=0._erase_old`` would be parsed as a partition VALUE by
-    # any concurrent plain ``spark.read.parquet``, duplicating rows
-    # and coercing the partition column to string. Dot-prefixing keeps
-    # the backup adjacent (same dir → rename stays atomic) yet
-    # invisible to partition discovery.
-    suffix = "._erase_old"
-
-    def _backup_of(target: str) -> str:
-        parent, leaf = os.path.split(target.rstrip("/"))
-        return os.path.join(parent, "." + leaf + suffix)
-
-    # recovery from an interrupted prior run: a backup whose target is
-    # missing IS the data (the run died between the two renames) —
-    # restore it; one whose target exists is stale — drop it. Backups
-    # sit next to the table root or next to a partition directory at
-    # ANY nesting depth (multi-column partitioning), so the scan walks
-    # the whole tree. Legacy un-dotted backups from older runs are
-    # recovered too.
-    scan = [root + suffix, _backup_of(root)]
-    for walk_root, dirs, _files in os.walk(path):
-        scan += [os.path.join(walk_root, d) for d in dirs
-                 if d.endswith(suffix)]
-    for backup in scan:
-        if not os.path.isdir(backup):
-            continue
-        parent, leaf = os.path.split(backup)
-        leaf = leaf[:-len(suffix)]
-        target = os.path.join(
-            parent, leaf[1:] if leaf.startswith(".") else leaf)
-        if os.path.isdir(target):
-            shutil.rmtree(backup)
-        else:
-            os.rename(backup, target)
 
     # distinct so the before/kept counts can share ONE left-join job
     # (duplicate keys would multiply left-join rows); also shrinks the
     # broadcast. The anti-join semantics never cared about dups.
     kdf = (keys.select(F.col(keys.columns[0]).alias("__erase_key"))
            .distinct())
-
-    def _counts(df_in):
-        """(total, kept) in ONE job: rows with no key match are kept.
-        Two separate .count() actions were ~0.85 s of fixed job
-        latency each at sf0.1 (r13; the same measurement that
-        motivated the one-job partition rewrite below)."""
-        row = (df_in.join(F.broadcast(kdf),
-                          df_in[key_col] == kdf["__erase_key"], "left")
-               .agg(F.count(F.lit(1)).alias("__all"),
-                    F.coalesce(F.sum(F.isnull("__erase_key")
-                                     .cast("bigint")), F.lit(0))
-                    .alias("__kept"))
-               .first())
-        return int(row["__all"]), int(row["__kept"])
-
-    def _swap_in(kept, kept_cnt, target, tmp):
-        """Replace ``target`` with ``kept`` (staged at ``tmp``, outside
-        the table root) behind a rename-atomic swap; a FULLY-erased
-        target is removed outright (hive semantics: an empty partition
-        has no directory — and an empty parquet dir cannot even be
-        re-read)."""
-        backup = _backup_of(target)
-        if os.path.isdir(backup):
-            shutil.rmtree(backup)
-        if kept_cnt == 0:
-            os.rename(target, backup)
-            shutil.rmtree(backup)
-            return
-        kept.write.mode("overwrite").parquet(tmp)
-        os.rename(target, backup)
-        os.rename(tmp, target)
-        shutil.rmtree(backup)
-
-    if not partition_cols:
-        df = spark.read.parquet(path)
-        before, kept_cnt = _counts(df)
-        kept = df.join(F.broadcast(kdf),
-                       df[key_col] == kdf["__erase_key"], "left_anti")
-        if kept_cnt == before:          # no key present: true no-op,
-            return {"rows_erased": 0,   # zero IO, layout untouched
-                    "partitions_rewritten": -1}
-        _swap_in(kept, kept_cnt, root, stage)
-        return {"rows_erased": before - kept_cnt,
-                "partitions_rewritten": -1}
 
     def _hive_seg(c, v):
         # Spark/Hadoop partition-path encoding: NULL →
@@ -551,89 +450,87 @@ def erase_keys(spark: SparkSession, path: str, key_col: str,
                 out.append(ch)
         return f"{c}={''.join(out)}"
 
-    df = spark.read.parquet(path)
-    affected = [tuple(r) for r in
+    with commit.Batch(path) as batch:
+        df = spark.read.parquet(path)
+        if not partition_cols:
+            # (total, kept) in ONE left-join job, rows with no key match
+            # being kept: the no-op exit must decide before any write
+            row = (df.join(F.broadcast(kdf),
+                           df[key_col] == kdf["__erase_key"], "left")
+                   .agg(F.count(F.lit(1)).alias("__all"),
+                        F.coalesce(F.sum(F.isnull("__erase_key")
+                                         .cast("bigint")), F.lit(0))
+                        .alias("__kept"))
+                   .first())
+            before, kept_cnt = int(row["__all"]), int(row["__kept"])
+            if kept_cnt == before:          # no key present: true no-op,
+                return {"rows_erased": 0,   # zero IO, layout untouched
+                        "partitions_rewritten": -1}
+            tmp = batch.stage()
+            if kept_cnt:                    # else the table is removed
                 (df.join(F.broadcast(kdf),
-                         df[key_col] == kdf["__erase_key"], "left_semi")
-                 .select(*partition_cols).distinct().collect())]
-    subs = []
-    for values in affected:
-        sub = os.path.join(path, *[_hive_seg(c, v) for c, v in
-                                   zip(partition_cols, values)])
-        # pre-validate EVERY path before mutating ANY partition: a
-        # value whose on-disk encoding we failed to reproduce must
-        # fail the whole call cleanly, never mid-loop after some
-        # partitions were already rewritten
-        if not os.path.isdir(sub):
-            raise ValueError(
-                f"erase_keys: derived partition path does not exist: "
-                f"{sub} (partition value encoding mismatch?)")
-        subs.append(sub)
-    if not subs:
-        return {"rows_erased": 0, "partitions_rewritten": 0}
+                         df[key_col] == kdf["__erase_key"], "left_anti")
+                 .write.mode("overwrite").parquet(tmp))
+            return {"rows_erased": before - kept_cnt,
+                    "partitions_rewritten": -1}
 
-    # Rewrite ALL affected partitions in ONE partitioned-write job to
-    # the stage dir, then swap each in rename-atomically. A
-    # rewrite-per-partition loop would serialize one Spark job per
-    # affected partition — measured at sf0.1 that is ~0.85 s of fixed
-    # job latency EACH (64 partitions: 54.6 s looped vs one job), and
-    # at cluster scale a 1000-partition erasure batch must fan its
-    # rewrite across executors, not the driver's loop. The swap
-    # discipline is unchanged: per-partition backup + two renames, so
-    # a crash at any point leaves every partition either old, new, or
-    # backup-recoverable (the roll-forward scan above), and readers
-    # never observe a half-written partition.
-    part = (spark.read.option("basePath", path).parquet(*subs))
-    # an affected set that is ONLY null partitions (the
-    # __HIVE_DEFAULT_PARTITION__ dir) infers its partition column as
-    # VOID, which the partitioned write rejects — re-type it from the
-    # full-table read (string if the whole table is null-only; the
-    # null dir name is type-independent, so the layout is unchanged)
-    tbl_types = dict(df.dtypes)
-    for c, dt in part.dtypes:
-        if c in partition_cols and dt == "void":
-            want = tbl_types.get(c, "string")
-            part = part.withColumn(
-                c, F.col(c).cast("string" if want == "void" else want))
-    # r14: the before/kept counts ride the STAGED WRITE itself via an
-    # Observation on the pre-filter join (one job instead of two — the
-    # separate _counts left-join aggregate was ~0.5-0.9 s of fixed job
-    # latency at sf0.1, and at scale a full extra pass over the
-    # affected partitions). left join + filter(isnull) ≡ left_anti
-    # because kdf is deduplicated (no row multiplication) and a NULL
-    # key matches nothing on either form; the whole-table branch keeps
-    # _counts because its no-op exit must decide BEFORE any write.
-    from pyspark.sql import Observation
-    obs = Observation("erase_counts")
-    joined = (part.join(F.broadcast(kdf),
-                        part[key_col] == kdf["__erase_key"], "left")
-              .observe(obs,
-                       F.count(F.lit(1)).alias("__all"),
-                       F.coalesce(F.sum(F.isnull("__erase_key")
-                                        .cast("bigint")), F.lit(0))
-                       .alias("__kept")))
-    kept = joined.filter(F.isnull("__erase_key")).drop("__erase_key")
-    (kept.write.mode("overwrite").partitionBy(*partition_cols)
-     .parquet(stage))
-    before, kept_cnt = int(obs.get["__all"]), int(obs.get["__kept"])
-    # strip Spark's per-job bookkeeping (written once at the stage
-    # ROOT, never inside partition subdirs) before any subdir becomes
-    # live table data
-    marker = os.path.join(stage, "_SUCCESS")
-    if os.path.isfile(marker):
-        os.remove(marker)
-    for sub in subs:
-        tmp = os.path.join(stage, os.path.relpath(sub, path))
-        backup = _backup_of(sub)
-        if os.path.isdir(backup):
-            shutil.rmtree(backup)
-        os.rename(sub, backup)
-        if os.path.isdir(tmp):
-            os.rename(tmp, sub)
-        # else: every row of this partition was erased — hive
-        # semantics, the partition directory disappears
-        shutil.rmtree(backup)
-    if os.path.isdir(stage):
-        shutil.rmtree(stage)
-    return {"rows_erased": before - kept_cnt,
-            "partitions_rewritten": len(affected)}
+        affected = [tuple(r) for r in
+                    (df.join(F.broadcast(kdf),
+                             df[key_col] == kdf["__erase_key"], "left_semi")
+                     .select(*partition_cols).distinct().collect())]
+        parts = []
+        for values in affected:
+            part = os.path.join(*[_hive_seg(c, v) for c, v in
+                                  zip(partition_cols, values)])
+            # a value whose on-disk encoding we failed to reproduce must
+            # fail the whole call before anything is staged
+            if not os.path.isdir(os.path.join(path, part)):
+                raise ValueError(
+                    f"erase_keys: derived partition path does not exist: "
+                    f"{os.path.join(path, part)} (partition value "
+                    f"encoding mismatch?)")
+            parts.append(part)
+        if not parts:
+            return {"rows_erased": 0, "partitions_rewritten": 0}
+
+        # ALL affected partitions are rewritten by ONE partitioned-write
+        # job into the staged copy, of which only they swap in: a
+        # rewrite-per-partition loop would serialize one Spark job per
+        # affected partition — measured at sf0.1 that is ~0.85 s of
+        # fixed job latency EACH (64 partitions: 54.6 s looped vs one
+        # job), and at cluster scale a 1000-partition erasure batch must
+        # fan its rewrite across executors, not the driver's loop. A
+        # partition with no kept row gets no staged subdir, so the
+        # commit removes it.
+        part_df = spark.read.option("basePath", path).parquet(
+            *[os.path.join(path, p) for p in parts])
+        # an affected set that is ONLY null partitions (the
+        # __HIVE_DEFAULT_PARTITION__ dir) infers its partition column as
+        # VOID, which the partitioned write rejects — re-type it from the
+        # full-table read (string if the whole table is null-only; the
+        # null dir name is type-independent, so the layout is unchanged)
+        tbl_types = dict(df.dtypes)
+        for c, dt in part_df.dtypes:
+            if c in partition_cols and dt == "void":
+                want = tbl_types.get(c, "string")
+                part_df = part_df.withColumn(
+                    c, F.col(c).cast("string" if want == "void" else want))
+        # The before/kept counts ride the staged write itself, as an
+        # Observation on the pre-filter join: no separate count job, and
+        # no second pass over the affected partitions. left join +
+        # filter(isnull) ≡ left_anti because kdf is deduplicated (no row
+        # multiplication) and a NULL key matches nothing on either form.
+        from pyspark.sql import Observation
+        obs = Observation("erase_counts")
+        joined = (part_df.join(F.broadcast(kdf),
+                               part_df[key_col] == kdf["__erase_key"], "left")
+                  .observe(obs,
+                           F.count(F.lit(1)).alias("__all"),
+                           F.coalesce(F.sum(F.isnull("__erase_key")
+                                            .cast("bigint")), F.lit(0))
+                           .alias("__kept")))
+        (joined.filter(F.isnull("__erase_key")).drop("__erase_key")
+         .write.mode("overwrite").partitionBy(*partition_cols)
+         .parquet(batch.stage(parts=parts)))
+        return {"rows_erased": int(obs.get["__all"]) - int(obs.get["__kept"]),
+                "partitions_rewritten": len(affected)}

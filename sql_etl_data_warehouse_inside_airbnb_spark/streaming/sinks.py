@@ -12,22 +12,22 @@ modules/data_loader.py:251-290 in the reference).
 At scale the target is a table format with transactional MERGE
 (Delta/Iceberg ``MERGE INTO``) and the per-batch merge is a metadata
 commit. This parquet implementation keeps the identical algebra —
-read target, anti-join ∪ source, atomic directory swap — so the
-semantics are testable here without those storage deps; swap the
-``_commit`` step for ``MERGE INTO`` when the catalog has one.
+read target, anti-join ∪ source, then one ``sources/commit.py`` batch
+that swaps the merged copy in — so the semantics are testable here
+without those storage deps; replace that batch with ``MERGE INTO`` when
+the catalog has one.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame
 
 from sql_etl_data_warehouse_inside_airbnb_spark.operators.merge import (
     merge_upsert,
 )
+from sql_etl_data_warehouse_inside_airbnb_spark.sources import commit
 
 
 def upsert_batch_to_parquet(batch_df: DataFrame, target_path: str,
@@ -35,40 +35,28 @@ def upsert_batch_to_parquet(batch_df: DataFrame, target_path: str,
     """MERGE one (micro-)batch into a parquet target by ``key``.
 
     Source wins on key conflict — exactly the semantics a re-emitted
-    or updated window needs. The swap is write-staging-then-rename so
-    a reader never sees a half-written target (the local stand-in for
-    a table-format transactional commit).
+    or updated window needs. The merged target is staged and swapped in
+    as one commit batch, so a reader never sees a half-written target
+    (the local stand-in for a table-format transactional commit).
 
-    Crash safety: the old target is RENAMED aside (never rmtree'd
-    before the new one is in place), so a kill at any point leaves the
-    merged history recoverable — the next invocation's recovery
-    preamble restores it and the checkpointed foreachBatch retry
-    re-merges the batch. (A rmtree-then-rename swap would make a
-    retried first batch take the "first write" branch and silently
-    drop all previously merged keys.)
+    Crash safety: the live target is set aside, never deleted, until the
+    merged copy is in place, so a kill at any point leaves the merged
+    history recoverable — the next invocation recovers the target first
+    and the checkpointed foreachBatch retry re-merges the batch. (A
+    delete-then-rename swap would make a retried first batch take the
+    "first write" branch and silently drop all previously merged keys.)
     """
     spark = batch_df.sparkSession
-    backup = target_path.rstrip("/") + "._upsert_old"
-    if os.path.isdir(backup):
+    with commit.Batch(target_path) as batch:
         if os.path.isdir(target_path):
-            shutil.rmtree(backup)            # died after swap: stale
+            target = spark.read.parquet(target_path)
+            merged = merge_upsert(target, batch_df, key,
+                                  count_actions=False).df
         else:
-            os.rename(backup, target_path)   # died mid-swap: restore
-    if os.path.isdir(target_path):
-        target = spark.read.parquet(target_path)
-        merged = merge_upsert(target, batch_df, key,
-                              count_actions=False).df
-    else:
-        merged = batch_df.dropDuplicates([key])
-    staging = tempfile.mkdtemp(prefix="upsert_staging_",
-                               dir=os.path.dirname(target_path) or ".")
-    # materialize BEFORE touching the target: merged still reads it
-    merged.write.mode("overwrite").parquet(staging)
-    if os.path.isdir(target_path):
-        os.rename(target_path, backup)
-    os.rename(staging, target_path)
-    if os.path.isdir(backup):
-        shutil.rmtree(backup)
+            merged = batch_df.dropDuplicates([key])
+        # merged still reads the live target, which stays in place
+        # until the commit
+        merged.write.mode("overwrite").parquet(batch.stage())
 
 
 def run_stream_upsert_parquet(stream_df: DataFrame, target_path: str,

@@ -8,6 +8,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from sql_etl_data_warehouse_inside_airbnb_spark.sources import commit
 from sql_etl_data_warehouse_inside_airbnb_spark.sources.io import (
     compact_parquet,
 )
@@ -34,8 +35,8 @@ def test_compacts_small_files_losslessly(spark, tmp_path):
     assert len(_parquet_files(path)) == 1
     after = {(r.id, r.v) for r in spark.read.parquet(path).collect()}
     assert after == before
-    assert not os.path.exists(path + "._compact_tmp")
-    assert not os.path.exists(path + "._compact_old")
+    assert not os.path.exists(commit.staged(path))
+    assert not os.path.exists(commit.aside(path))
 
 
 def test_partitioned_compaction_keeps_layout(spark, tmp_path):

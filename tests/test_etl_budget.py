@@ -118,7 +118,7 @@ def test_independent_tables_stage_concurrently(spark, tmp_path, monkeypatch):
         name = os.path.basename(path)
         with lock:
             log.append(("start", name))
-        if name in ("dim_listings.__tmp", "dim_dates.__tmp"):
+        if name in (".dim_listings.__tmp", ".dim_dates.__tmp"):
             barrier.wait()
         try:
             return write(df, path, partition_col)
@@ -133,8 +133,8 @@ def test_independent_tables_stage_concurrently(spark, tmp_path, monkeypatch):
                           ("fact_calendar", ["dim_listings"]),
                           ("fact_reviews", ["dim_listings", "dim_dates"])):
         for dep in inputs:
-            assert (log.index(("end", dep + ".__tmp"))
-                    < log.index(("start", table + ".__tmp"))), (
+            assert (log.index(("end", f".{dep}.__tmp"))
+                    < log.index(("start", f".{table}.__tmp"))), (
                 table, dep, log)
 
 
@@ -160,7 +160,7 @@ def test_full_load_folds_the_empty_prior(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(etl, "_write_counted", captured)
     run_pipeline(spark, src, str(tmp_path / "wh"))
-    assert {f"{n}.__tmp" for n in etl.CORE_TABLES} <= set(plans)
+    assert {f".{n}.__tmp" for n in etl.CORE_TABLES} <= set(plans)
     for name, plan in plans.items():
         empty_legs, leaves, stack = [], set(), [plan]
         while stack:

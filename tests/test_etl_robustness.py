@@ -13,9 +13,11 @@ import shutil
 import threading
 
 import pytest
+from killpoints import Killed, kill_points, tree
 
 from sql_etl_data_warehouse_inside_airbnb_spark.plans import etl
 from sql_etl_data_warehouse_inside_airbnb_spark.plans.etl import run_pipeline
+from sql_etl_data_warehouse_inside_airbnb_spark.sources import commit
 
 LISTING_COLS = ["id", "host_id", "host_name", "host_location",
                 "neighbourhood_cleansed", "latitude", "longitude", "price",
@@ -108,17 +110,12 @@ def test_placeholder_schemas_survive_roundtrip(spark, tmp_path):
 
 
 def test_incremental_swap_recovers_from_crash(spark, tmp_path):
-    """Simulate a kill inside the table-swap window (table renamed to
-    .__old, new one not yet in place): the next incremental run must
-    restore the prior warehouse instead of full-rebuilding from the
-    partial day-2 dir."""
+    """A kill inside the table-swap window (fact_reviews set aside, its
+    new copy not yet in place): the next incremental run must complete
+    the batch instead of full-rebuilding from the partial day-2 dir."""
     out = tmp_path / "wh"
     t1 = run_pipeline(spark, str(_day1(tmp_path)), str(out))
     assert t1.stats["fact_reviews"] == 1
-
-    # crash simulation on fact_reviews
-    fr = os.path.join(str(out), "fact_reviews")
-    os.rename(fr, fr + ".__old")
 
     day2 = tmp_path / "day2"
     day2.mkdir()
@@ -129,11 +126,17 @@ def test_incremental_swap_recovers_from_crash(spark, tmp_path):
     _wgz(day2, "France_Paris_reviews_2025-06-08.csv.gz", REVIEW_COLS, [
         [102, 9, "2025-06-09", 79, "Ly", "fine"],
     ])
+    fr = str(out / "fact_reviews")
+    with pytest.raises(Killed), kill_points(
+            out, when=lambda op, path: path == commit.staged(fr)):
+        run_pipeline(spark, str(day2), str(out), incremental=True)
+    assert not os.path.exists(fr) and commit.pending(out)
+
     t2 = run_pipeline(spark, str(day2), str(out), incremental=True)
-    # day1's review survived the simulated crash + retry
+    # day1's review survived the kill + retry
     assert t2.stats["fact_reviews"] == 2
     assert t2.stats["dim_listings"] == 2
-    assert not os.path.exists(fr + ".__old")
+    assert not os.path.exists(commit.aside(fr))
 
 
 def test_fact_reviews_partitioned_by_month(spark, tmp_path):
@@ -206,7 +209,7 @@ def _day1_live_and_day2_reference(spark, tmp_path):
 
 
 def _assert_day1_live_then_retry_commits(spark, out, day2, t1, want):
-    assert not os.path.exists(out / etl._SWAP_JOURNAL)
+    assert not commit.pending(out)
     for name in etl.CORE_TABLES:
         live = spark.read.parquet(str(out / name))
         assert live.count() == t1.stats[name], name
@@ -220,10 +223,11 @@ def test_crash_while_staging_fact_reviews_leaves_day1_live(spark, tmp_path,
     was swapped and no journal exists, so the live warehouse still holds
     day 1, and a retry commits the same batch as an uninterrupted run."""
     out, day2, t1, want = _day1_live_and_day2_reference(spark, tmp_path)
+    before = tree(out)
     write = etl._write_counted
 
     def killed_at_fact_reviews(df, path, partition_col=None):
-        if os.path.basename(path) == "fact_reviews.__tmp":
+        if os.path.basename(path) == ".fact_reviews.__tmp":
             raise RuntimeError("killed while staging fact_reviews")
         return write(df, path, partition_col)
 
@@ -231,6 +235,7 @@ def test_crash_while_staging_fact_reviews_leaves_day1_live(spark, tmp_path,
     with pytest.raises(RuntimeError, match="killed"):
         run_pipeline(spark, str(day2), str(out), incremental=True)
     monkeypatch.undo()
+    assert tree(out) == before
     _assert_day1_live_then_retry_commits(spark, out, day2, t1, want)
 
 
@@ -242,6 +247,7 @@ def test_crash_in_one_write_waits_for_writes_in_flight(spark, tmp_path,
     warehouse live, and a retry commits the same batch as an
     uninterrupted run."""
     out, day2, t1, want = _day1_live_and_day2_reference(spark, tmp_path)
+    before = tree(out)
     write = etl._write_counted
     listings_started = threading.Event()
     dates_failed = threading.Event()
@@ -254,11 +260,11 @@ def test_crash_in_one_write_waits_for_writes_in_flight(spark, tmp_path,
         with lock:
             in_flight.append(name)
         try:
-            if name == "dim_dates.__tmp":
+            if name == ".dim_dates.__tmp":
                 assert listings_started.wait(60), "dim_listings not started"
                 dates_failed.set()
                 raise RuntimeError("killed while staging dim_dates")
-            if name == "dim_listings.__tmp":
+            if name == ".dim_listings.__tmp":
                 listings_started.set()
                 assert dates_failed.wait(60), "dim_dates did not fail"
             return write(df, path, partition_col)
@@ -273,7 +279,8 @@ def test_crash_in_one_write_waits_for_writes_in_flight(spark, tmp_path,
     monkeypatch.undo()
 
     assert not in_flight
-    assert "dim_listings.__tmp" in returned
+    assert ".dim_listings.__tmp" in returned
+    assert tree(out) == before
     _assert_day1_live_then_retry_commits(spark, out, day2, t1, want)
 
 
@@ -295,18 +302,24 @@ def test_failed_rebuild_leaves_previous_warehouse_live(spark, tmp_path,
     _wgz(rebuild, "France_Paris_reviews_2025-06-08.csv.gz", REVIEW_COLS, [
         [102, 9, "2025-06-09", 79, "Ly", "fine"],
     ])
+    before = tree(out)
     write = etl._write_counted
 
     def killed_at_fact_reviews(df, path, partition_col=None):
-        if os.path.basename(path).startswith("fact_reviews"):
+        if os.path.basename(path) == ".fact_reviews.__tmp":
             raise RuntimeError("killed while writing fact_reviews")
         return write(df, path, partition_col)
 
     monkeypatch.setattr(etl, "_write_counted", killed_at_fact_reviews)
     with pytest.raises(RuntimeError, match="killed"):
         run_pipeline(spark, str(rebuild), str(out))
+    # a failed first load leaves no output dir at all
+    with pytest.raises(RuntimeError, match="killed"):
+        run_pipeline(spark, str(rebuild), str(tmp_path / "first"))
     monkeypatch.undo()
-    assert not os.path.exists(out / etl._SWAP_JOURNAL)
+    assert tree(out) == before
+    assert not (tmp_path / "first").exists()
+    assert not commit.pending(out)
     for name in etl.CORE_TABLES:
         live = spark.read.parquet(str(out / name))
         assert live.count() == t1.stats[name], name
@@ -323,10 +336,11 @@ def test_failed_load_commits_no_rejects_slice(spark, tmp_path, monkeypatch):
                                           "load_batch=*")))
 
     day1_slices = slices()
+    before = tree(out)
     write = etl._write_counted
 
     def killed_at_fact_calendar(df, path, partition_col=None):
-        if os.path.basename(path) == "fact_calendar.__tmp":
+        if os.path.basename(path) == ".fact_calendar.__tmp":
             raise RuntimeError("killed while staging fact_calendar")
         return write(df, path, partition_col)
 
@@ -335,6 +349,7 @@ def test_failed_load_commits_no_rejects_slice(spark, tmp_path, monkeypatch):
         run_pipeline(spark, str(day2), str(out), incremental=True)
     monkeypatch.undo()
     assert slices() == day1_slices
+    assert tree(out) == before
     assert run_pipeline(spark, str(day2), str(out),
                         incremental=True).stats == want
     assert len(slices() - day1_slices) == 1

@@ -9,12 +9,18 @@ import gzip
 import os
 import shutil
 
+import pytest
+from killpoints import Killed, kill_points
 from pyspark.sql import functions as F
 
 from sql_etl_data_warehouse_inside_airbnb_spark.plans.enrich import (
     add_review_lang,
 )
-from sql_etl_data_warehouse_inside_airbnb_spark.plans.etl import run_pipeline
+from sql_etl_data_warehouse_inside_airbnb_spark.plans.etl import (
+    CORE_TABLES,
+    run_pipeline,
+)
+from sql_etl_data_warehouse_inside_airbnb_spark.sources import commit
 
 LISTING_COLS = ["id", "host_id", "host_name", "host_location",
                 "neighbourhood_cleansed", "latitude", "longitude", "price",
@@ -220,13 +226,6 @@ def test_mid_swap_crash_rolls_forward_without_replay(spark, tmp_path):
     some still staged) must roll FORWARD to the complete new state on
     the next pipeline call — no mixed warehouse, and a retried batch
     never replays id-map/reject appends onto half-merged state."""
-    import shutil
-
-    from sql_etl_data_warehouse_inside_airbnb_spark.plans.etl import (
-        _SWAP_JOURNAL,
-        CORE_TABLES,
-    )
-
     day1 = tmp_path / "day1"
     day2 = tmp_path / "day2"
     out = tmp_path / "wh"
@@ -238,6 +237,8 @@ def test_mid_swap_crash_rolls_forward_without_replay(spark, tmp_path):
          "2.33", "$80.00", "5", "4.00", "1"],
     ])
     run_pipeline(spark, str(day1), str(out))
+    ref = tmp_path / "ref"
+    shutil.copytree(out, ref)
 
     _wgz(day2, "France_Paris_listings_2025-06-08.csv.gz", LISTING_COLS, [
         [103, 9003, "Cal", "Nice, France", "Port", "43.70", "7.26",
@@ -245,38 +246,36 @@ def test_mid_swap_crash_rolls_forward_without_replay(spark, tmp_path):
         ["also_bad", 9004, "Dee", "Nice, France", "Port", "43.71",
          "7.27", "$61.00", "1", "", "1"],
     ])
-    t2 = run_pipeline(spark, str(day2), str(out), incremental=True)
+    t2 = run_pipeline(spark, str(day2), str(ref), incremental=True)
     want_idmap = t2.stats["dim_listing_id_map"]
     want_rejects_total = spark.read.parquet(
-        str(out / "rejects_listings")).count()
+        str(ref / "rejects_listings")).count()
     assert want_rejects_total == 2    # one bad row per day
 
-    # reconstruct the mid-swap crash: day-2 state becomes the staged
-    # .__tmp for SOME tables while others are already swapped; the
-    # journal says the batch was fully staged
-    committed = {n: str(out / n) for n in CORE_TABLES}
-    names = list(committed)
-    for i, n in enumerate(names):
-        if i % 2 == 0:
-            continue                      # these "already swapped"
-        live = committed[n]
-        shutil.move(live, live + ".__tmp")       # staged, not landed
-        # the pre-batch live table is irrelevant for roll-forward;
-        # simulate it renamed aside already for one of them
-        if i == 1:
-            os.makedirs(live + ".__old")
-    with open(out / _SWAP_JOURNAL, "w") as f:
-        f.write("\n".join(names) + "\n")
+    # kill day 2 mid-swap: three of the batch's staged tables are in
+    # place and the rest still staged, under a journal that says the
+    # batch was fully staged
+    swapped_in: list[str] = []
+
+    def at_fourth_swap_in(op, path):
+        if op == "replace" and path.endswith(".__tmp"):
+            swapped_in.append(path)
+        return len(swapped_in) == 4
+
+    with pytest.raises(Killed), kill_points(out, when=at_fourth_swap_in):
+        run_pipeline(spark, str(day2), str(out), incremental=True)
+    assert commit.pending(out)
 
     # a NO-OP day-3 run (re-reads day2 dir but the journal fires
     # first): recovery must complete the swap, then load the fully
     # committed day-2 warehouse as prior
+    committed = {n: str(out / n) for n in CORE_TABLES}
     t3 = run_pipeline(spark, str(day2), str(out), incremental=True)
-    assert not os.path.exists(out / _SWAP_JOURNAL)
-    for n in names:
+    assert not commit.pending(out)
+    for n in committed:
         assert os.path.exists(committed[n])
-        assert not os.path.exists(committed[n] + ".__tmp")
-        assert not os.path.exists(committed[n] + ".__old")
+        assert not os.path.exists(commit.staged(committed[n]))
+        assert not os.path.exists(commit.aside(committed[n]))
     # day-3 re-ran the same batch over the COMMITTED day-2 state: the
     # PK-keyed tables stay deduped, and the per-load audit trails grow
     # by exactly one more load's worth (reference semantics), never by

@@ -11,8 +11,10 @@ import os
 import shutil
 
 import pytest
+from killpoints import Killed, kill_points
 from pyspark.sql import functions as F
 
+from sql_etl_data_warehouse_inside_airbnb_spark.sources import commit
 from sql_etl_data_warehouse_inside_airbnb_spark.sources.io import (
     compact_parquet,
     normalize_event_time,
@@ -23,30 +25,37 @@ from sql_etl_data_warehouse_inside_airbnb_spark.streaming.sinks import (
 
 
 def test_upsert_sink_recovers_mid_swap_crash(spark, tmp_path):
-    # batch 1 merges; simulate a kill between the two renames (target
-    # gone, backup present); the retried batch must NOT lose batch 1
+    # batch 1 merges; batch 2 is killed between the two renames (target
+    # set aside, merged copy not yet in place); the retried batch must
+    # NOT lose batch 1
     target = str(tmp_path / "upsert_target")
     b1 = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
     b2 = spark.createDataFrame([(2, "B"), (3, "c")], "k int, v string")
     upsert_batch_to_parquet(b1, target, "k")
-    os.rename(target, target + "._upsert_old")  # crash window state
+    with pytest.raises(Killed), kill_points(
+            tmp_path, when=lambda op, p: p == commit.staged(target)):
+        upsert_batch_to_parquet(b2, target, "k")
+    assert not os.path.isdir(target)             # crash window state
     upsert_batch_to_parquet(b2, target, "k")
     got = {(r.k, r.v) for r in spark.read.parquet(target).collect()}
     assert got == {(1, "a"), (2, "B"), (3, "c")}
-    assert not os.path.isdir(target + "._upsert_old")
+    assert not os.path.isdir(commit.aside(target))
 
 
 def test_compact_recovers_from_interrupted_swap(spark, tmp_path):
     path = str(tmp_path / "t")
     spark.createDataFrame([(i,) for i in range(100)], "x int") \
         .repartition(10).write.parquet(path)
-    # simulate: prior run died between rename(path->backup) and
-    # rename(tmp->path) — the backup IS the table
-    os.rename(path, path + "._compact_old")
+    # a compaction killed between its two renames: the live table is set
+    # aside and the compacted copy not yet in place
+    with pytest.raises(Killed), kill_points(
+            tmp_path, when=lambda op, p: p == commit.staged(path)):
+        compact_parquet(spark, path, target_file_mb=128)
+    assert not os.path.isdir(path)
     stats = compact_parquet(spark, path, target_file_mb=128)
     assert stats["files_after"] <= stats["files_before"]
     assert spark.read.parquet(path).count() == 100
-    assert not os.path.isdir(path + "._compact_old")
+    assert not os.path.isdir(commit.aside(path))
 
 
 def test_compact_partitioned_splits_hot_partition(spark, tmp_path):
